@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
   * no explode, no shuffle before the band join); candidate generation
   * is bucket-bounded (never corpus-wide); label propagation runs in
   * bounded rounds. No driver loops over data; the only driver state is
-  * the convergence counter.
+  * the convergence counter. (Incremental admission of a BOUNDED batch
+  * is the exception by design: see [[incrementalIndexed]].)
   */
 object DedupDocs {
 
@@ -207,11 +208,11 @@ object DedupDocs {
     * ([[DedupIndex]]): the corpus-side inputs — fingerprints, band
     * buckets, hashed distinct grams — come from index tables written
     * at admission time, so the corpus TEXT is never scanned again
-    * (pinned in DedupIndexSpec: the corpus parquet appears nowhere in
-    * the plan). Each batch costs one scan of ITSELF plus joins against
-    * precomputed state — the steady-state shape of a crawl pipeline at
-    * 100 TB, where re-hashing the corpus per batch is the difference
-    * between an hourly ingest and a daily one.
+    * (pinned in DedupIndexSpec: no query the call runs scans the
+    * corpus parquet). Each batch costs one scan of ITSELF plus joins
+    * against precomputed state — the steady-state shape of a crawl
+    * pipeline at 100 TB, where re-hashing the corpus per batch is the
+    * difference between an hourly ingest and a daily one.
     *
     * Every index-side input is FILTERED BY THE BATCH before any
     * shuffle: fingerprints join the batch's fp set directly, corpus
@@ -230,62 +231,76 @@ object DedupDocs {
     * recall-over-precision trade as apply's star fallback), so the
     * verification join stays bounded by maxVerifyBucket² per bucket.
     *
-    * Probe PUSHDOWN: equi-joining a small batch against the index
-    * restricts ROWS but still scans every index byte — a join key set
-    * is invisible to the parquet reader. So when the batch's key sets
-    * are small (≤ `maxPushdownKeys` distinct values — the steady-state
-    * batch regime), they are collected and pushed into the index scans
-    * as literal In predicates: a semantic no-op (the joins keep only
-    * matching keys anyway), but against [[DedupIndex]]'s sorted-by-key
-    * layout it turns each probe into an index LOOKUP — every parquet
-    * row group whose min/max span contains none of the batch's keys is
-    * never read, so probe scanned-bytes is O(keys × row-group size) per
-    * file generation, not O(index). Grams get the same treatment keyed
-    * by the candidate dst set (materialized first — it is bounded by
-    * maxVerifyBucket per shared bucket). Oversized batches skip the
-    * pushdown and fall back to the plain joins (a batch that large is
-    * re-clustering territory anyway). Collecting the key sets makes
-    * this op EAGER (three driver-bounded jobs at call time); the
-    * admission tail already materializes eagerly, so nothing new
-    * escapes. VolumeSpec pins the scanned-bytes bound across append
-    * generations and after compaction. */
+    * BOUNDED BATCHES are decided on the driver ([[BoundedAdmission]]):
+    * when the batch has at most `maxPushdownKeys` docs and band
+    * buckets — the steady-state ingest regime — it is collected once,
+    * the index rows it can touch are fetched by three literal-In
+    * lookups (fps by fingerprint, bands by bucket, grams by candidate
+    * corpus doc), and the rest of the protocol runs in plain Scala:
+    * about 7 Spark jobs instead of ~85, most of them AQE shuffle stages
+    * over a few dozen rows. An In lookup against [[DedupIndex]]'s
+    * sorted-by-key layout is an index LOOKUP — every parquet row group
+    * whose min/max span contains none of the keys is never read, so
+    * probe scanned-bytes is O(keys × row-group size) per file
+    * generation, not O(index). The result is a local DataFrame; the op
+    * is EAGER on this path.
+    *
+    * Larger batches (or ones whose candidate corpus set exceeds the
+    * cap) run the distributed plan, which `maxPushdownKeys = 0` forces
+    * — the parity reference for the driver decision. It pushes the
+    * same literal In predicates where the key set is known and
+    * bounded: fingerprints and buckets when the batch collect saw the
+    * whole batch, candidate dst docs when that set (materialized first
+    * — it is bounded by maxVerifyBucket per shared bucket) is within
+    * the cap. A batch too large for the collect is re-clustering
+    * territory anyway. VolumeSpec pins the scanned-bytes bound across
+    * append generations and after compaction. */
   def incrementalIndexed(index: DedupIndex.Frames, batch: DataFrame,
       minJaccard: Option[Double] = Some(0.5),
       maxVerifyBucket: Int = 32,
       checkpointDir: Option[String] = None,
       maxPushdownKeys: Int = 1024): DataFrame = {
+    graft.functions.GraftFunctions.register(batch.sparkSession)
+    val local = BoundedAdmission.collect(batch, index.rowsPerBand, maxPushdownKeys)
+    local
+      .flatMap(BoundedAdmission.admit(index, batch, _, minJaccard, maxVerifyBucket,
+        maxPushdownKeys))
+      .getOrElse(distributedIndexed(index, batch, local, minJaccard, maxVerifyBucket,
+        checkpointDir, maxPushdownKeys))
+  }
+
+  /** The distributed admission plan: every index-side input is
+    * filtered by the batch before any shuffle (see [[incrementalIndexed]]).
+    * `local` is the whole batch when the bounded collect saw it. */
+  private def distributedIndexed(index: DedupIndex.Frames, batch: DataFrame,
+      local: Option[Seq[BoundedAdmission.Doc]],
+      minJaccard: Option[Double],
+      maxVerifyBucket: Int,
+      checkpointDir: Option[String],
+      maxPushdownKeys: Int): DataFrame = {
     val spark = batch.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
 
-    // collect a bounded key set, or None when it exceeds the cap (the
-    // limit stops the driver transfer at cap+1 rows — never O(batch))
-    def boundedKeys(df: DataFrame): Option[Array[Any]] = {
-      val ks = df.limit(maxPushdownKeys + 1).collect().map(_.get(0))
-      if (ks.length > maxPushdownKeys) None else Some(ks)
-    }
-    def pushed(idx: DataFrame, key: String, keys: Option[Array[Any]]): DataFrame =
-      keys.fold(idx)(ks => idx.filter(col(key).isin(ks.toIndexedSeq: _*)))
-
-    val fpKeys = boundedKeys(
-      batch.select(md5($"text").as("fp")).filter($"fp".isNotNull).distinct())
+    // push a key set into an index scan as a literal In predicate when
+    // it is known and within the cap (a semantic no-op: the joins keep
+    // only matching keys anyway)
+    def pushed(idx: DataFrame, key: String, keys: Option[Seq[Any]]): DataFrame =
+      keys.filter(_.size <= maxPushdownKeys).fold(idx)(ks => idx.filter(col(key).isin(ks: _*)))
 
     // equi-join on fp drops null fingerprints (null text) by itself;
     // no distinct() on the index side — the doc_id distinct below
     // absorbs fp multiplicity, and the raw join lets the small batch
     // side broadcast against the index scan
     val exactRej = batch.select($"doc_id", md5($"text").as("fp"))
-      .join(pushed(index.fps, "fp", fpKeys).select($"fp"), "fp")
+      .join(pushed(index.fps, "fp", local.map(_.flatMap(d => Option(d.fp)).distinct))
+        .select($"fp"), "fp")
       .select($"doc_id").distinct()
-
-    val bucketKeys = boundedKeys(
-      bandBuckets(batch, index.rowsPerBand).select($"bucket").distinct())
 
     val bBuckets = bandBuckets(batch, index.rowsPerBand)
       .withColumn("bn", count(lit(1)).over(Window.partitionBy($"bucket")))
     // restrict the index to the batch's buckets BEFORE the count
     // window: the window then shuffles only the shared slice
-    val cBuckets = pushed(index.bands, "bucket", bucketKeys)
+    val cBuckets = pushed(index.bands, "bucket", local.map(_.flatMap(_.buckets).distinct))
       .join(bBuckets.select($"bucket").distinct(), "bucket")
       .select($"bucket", $"doc_id".as("corpus_id"))
       .withColumn("cn", count(lit(1)).over(Window.partitionBy($"bucket")))
@@ -305,13 +320,16 @@ object DedupDocs {
           .select($"doc_id".as("src"), $"corpus_id".as("dst"))
           .distinct()
           .localCheckpoint(true)
-        val dstKeys = boundedKeys(cand.select($"dst").distinct())
+        // the limit stops the dst-set transfer at cap+1 rows; a set
+        // over the cap is not pushed
+        val dstKeys = cand.select($"dst").distinct()
+          .limit(maxPushdownKeys + 1).collect().toSeq.map(_.get(0))
         // batch grams hashed with the index's own spelling; corpus
         // gram sets from the index, restricted to candidate docs
         // before the size aggregate ever runs — and, when the dst set
         // is bounded, pushed into the sorted-by-doc_id grams scan so
         // non-candidate row groups are never read
-        val dstGrams = pushed(index.grams, "doc_id", dstKeys)
+        val dstGrams = pushed(index.grams, "doc_id", Some(dstKeys))
           .withColumnsRenamed(Map("doc_id" -> "dst"))
           .join(cand.select($"dst").distinct(), "dst")
         verifiedPairs(cand,

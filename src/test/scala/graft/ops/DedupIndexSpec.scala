@@ -49,23 +49,171 @@ class DedupIndexSpec extends SparkSpec {
     val indexDir = java.nio.file.Files.createTempDirectory("graft_didx_index").toString
     corpusDocs.write.mode("overwrite").parquet(corpusDir)
     DedupIndex.write(spark.read.parquet(corpusDir), indexDir)
+    // record the files of EVERY query an admission runs: the bounded
+    // path returns a local relation decided on the driver, and the
+    // distributed plan's output sits behind local checkpoints, so
+    // neither result's plan shows what was read
+    def scannedBy(admit: DedupIndex.Frames => org.apache.spark.sql.DataFrame) = {
+      val files = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(funcName: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+          qe.optimizedPlan.foreach {
+            case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+              l.relation match {
+                case r: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+                  r.location.rootPaths.foreach(p => files.add(p.toString))
+                case _ =>
+              }
+            case _ =>
+          }
+        override def onFailure(funcName: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+      }
+      val idx = DedupIndex.read(spark, indexDir)
+      spark.listenerManager.register(listener)
+      try {
+        val out = admit(idx)
+        val statuses = collectStatuses(out)
+        org.apache.spark.graft.ListenerBridge.waitUntilEmpty(spark.sparkContext)
+        (out, statuses, files.toArray.toSeq.map(_.toString))
+      } finally spark.listenerManager.unregister(listener)
+    }
+    // the recorder sees a corpus scan when one happens: the direct
+    // spelling re-derives the index from the corpus parquet
+    val (_, direct, rescanned) =
+      scannedBy(_ => DedupDocs.incremental(spark.read.parquet(corpusDir), batchDocs))
+    assert(rescanned.exists(_.contains(corpusDir)), s"corpus scan not recorded: $rescanned")
+    for (cap <- Seq(1024, 0)) {
+      val (out, statuses, files) =
+        scannedBy(DedupDocs.incrementalIndexed(_, batchDocs, maxPushdownKeys = cap))
+      // a 5-doc batch takes the bounded driver path unless the cap is 0
+      assert(out.isLocal == (cap > 0))
+      // every corpus-side input comes from the index tables
+      assert(files.exists(_.contains(indexDir)), s"no index scan recorded: $files")
+      assert(!files.exists(_.contains(corpusDir)), s"corpus docs re-scanned: $files")
+      // and the result still matches the direct spelling
+      assert(statuses == direct)
+    }
+  }
 
-    val out = DedupDocs.incrementalIndexed(
-      DedupIndex.read(spark, indexDir), batchDocs)
-    // the corpus parquet must appear NOWHERE in the admission plan —
-    // every corpus-side input comes from the index tables
-    val corpusScans = out.queryExecution.optimizedPlan.collect {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l
-    }.count(_.relation match {
-      case r: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-        r.location.rootPaths.exists(_.toString.contains(corpusDir))
-      case _ => false
-    })
-    assert(corpusScans == 0,
-      s"corpus docs re-scanned $corpusScans times:\n${out.queryExecution.optimizedPlan}")
-    // and the result still matches the direct spelling
-    assert(collectStatuses(out) ==
-      collectStatuses(DedupDocs.incremental(corpusDocs, batchDocs)))
+  // the driver decision must replay the distributed plan exactly:
+  // statuses, components and the output schema (nullability included)
+  private def assertParity(idx: DedupIndex.Frames,
+      batch: org.apache.spark.sql.DataFrame,
+      minJaccard: Option[Double] = Some(0.5),
+      maxVerifyBucket: Int = 32) = {
+    val bounded = DedupDocs.incrementalIndexed(idx, batch, minJaccard, maxVerifyBucket)
+    val reference = DedupDocs.incrementalIndexed(idx, batch, minJaccard, maxVerifyBucket,
+      maxPushdownKeys = 0)
+    assert(bounded.isLocal, "the batch must take the bounded driver path")
+    assert(!reference.isLocal, "maxPushdownKeys = 0 must run the distributed plan")
+    assert(bounded.schema == reference.schema,
+      s"schema ${bounded.schema.treeString} vs ${reference.schema.treeString}")
+    val got = collectStatuses(bounded)
+    assert(got == collectStatuses(reference))
+    got
+  }
+
+  // A~B and B~C pass a 0.5 trigram-Jaccard floor (0.57, 0.64) and all
+  // three share one band bucket; A~C does not (0.38)
+  private val chainA = "alpha bravo charlie delta echo foxtrot golf hotel india juliet " +
+    "kilo lima mike november oscar papa quebec romeo sierra tango"
+  private val chainB = "alpha bravox charlie delta echo foxtrot golf hotel indiax juliet " +
+    "kilo lima mike november oscar papa quebec romeo sierra tango"
+  private val chainC = "alphay bravox charlie delta echo foxtrot golf hotel indiax juliet " +
+    "kilo lima mike november oscar papa quebec romeoy sierra tango"
+
+  test("bounded batch equals the distributed plan: existing fixtures") {
+    val idx = DedupIndex.build(corpusDocs)
+    // doc 10 is both an exact and a near duplicate of corpus doc 1:
+    // corpus_exact wins
+    assert(assertParity(idx, batchDocs) == Set(
+      (10L, "corpus_exact", -1L), (11L, "corpus_near", -1L),
+      (12L, "admitted", 12L), (13L, "batch_dup", 12L), (14L, "admitted", 14L)))
+    assertParity(idx, batchDocs, minJaccard = Some(0.9))
+    assertParity(idx, batchDocs, minJaccard = None)
+  }
+
+  test("bounded batch equals the distributed plan: null text and docs under 3 words") {
+    val idx = DedupIndex.build(corpusDocs.unionByName(
+      Seq((3L, "short text")).toDF("doc_id", "text")))
+    // Option ids: a nullable doc_id column, which the output keeps
+    val batch = Seq[(Option[Long], String)](
+      (Some(50L), null), (Some(51L), null),
+      (Some(52L), "short text"), // no signature, no grams: exact dup of corpus 3
+      (Some(53L), "two words"), (Some(54L), "two words"), // exact dups of each other
+      (Some(55L), ""), (Some(56L), third))
+      .toDF("doc_id", "text")
+    assert(batch.schema("doc_id").nullable)
+    assert(assertParity(idx, batch) == Set(
+      (50L, "admitted", 50L), (51L, "admitted", 51L), (52L, "corpus_exact", -1L),
+      (53L, "admitted", 53L), (54L, "batch_dup", 53L), (55L, "admitted", 55L),
+      (56L, "admitted", 56L)))
+  }
+
+  test("bounded batch equals the distributed plan: within-batch transitive chain") {
+    val idx = DedupIndex.build(corpusDocs)
+    val batch = Seq((42L, chainC), (41L, chainB), (40L, chainA), (43L, third))
+      .toDF("doc_id", "text")
+    // A~B, B~C verified, A~C rejected: still one component, min id
+    assert(assertParity(idx, batch) == Set(
+      (40L, "admitted", 40L), (41L, "batch_dup", 40L), (42L, "batch_dup", 40L),
+      (43L, "admitted", 43L)))
+    // a 0.6 floor breaks A~B (0.57) but keeps B~C (0.64)
+    assert(assertParity(idx, batch, minJaccard = Some(0.6)) == Set(
+      (40L, "admitted", 40L), (41L, "admitted", 41L), (42L, "batch_dup", 41L),
+      (43L, "admitted", 43L)))
+    // the 3-doc bucket over maxVerifyBucket = 2 is a mega bucket:
+    // unverified star edges merge all three even under a strict floor
+    assert(assertParity(idx, batch, minJaccard = Some(0.9), maxVerifyBucket = 2) == Set(
+      (40L, "admitted", 40L), (41L, "batch_dup", 40L), (42L, "batch_dup", 40L),
+      (43L, "admitted", 43L)))
+  }
+
+  test("bounded batch equals the distributed plan: mega buckets on either side") {
+    // batch side: three copies of `near` share corpus doc 1's bucket,
+    // over maxVerifyBucket = 2 — rejected unverified under a 0.9 floor
+    // that the 0.83-Jaccard pair would fail
+    val batch = Seq((30L, near), (31L, near), (32L, near), (33L, third))
+      .toDF("doc_id", "text")
+    assert(assertParity(DedupIndex.build(corpusDocs), batch,
+      minJaccard = Some(0.9), maxVerifyBucket = 2) == Set(
+      (30L, "corpus_near", -1L), (31L, "corpus_near", -1L), (32L, "corpus_near", -1L),
+      (33L, "admitted", 33L)))
+    // corpus side: three corpus copies of `base` put one near-variant
+    // batch doc into a mega bucket; under maxVerifyBucket = 3 the same
+    // doc is verified and admitted by the 0.9 floor
+    val corpus = Seq((1L, base), (4L, base), (5L, base), (2L, other)).toDF("doc_id", "text")
+    val one = Seq((11L, near)).toDF("doc_id", "text")
+    assert(assertParity(DedupIndex.build(corpus), one,
+      minJaccard = Some(0.9), maxVerifyBucket = 2) == Set((11L, "corpus_near", -1L)))
+    assert(assertParity(DedupIndex.build(corpus), one,
+      minJaccard = Some(0.9), maxVerifyBucket = 3) == Set((11L, "admitted", 11L)))
+  }
+
+  test("a bounded admission runs a fixed handful of Spark jobs") {
+    // the distributed plan runs ~85 jobs on a small batch, most of them
+    // one AQE shuffle stage each; the driver decision collects the
+    // batch, its grams and three index lookups
+    val indexDir = java.nio.file.Files.createTempDirectory("graft_didx_jobs").toString
+    DedupIndex.write(corpusDocs, indexDir)
+    val idx = DedupIndex.read(spark, indexDir)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graft.ListenerBridge.waitUntilEmpty(sc)
+    sc.addSparkListener(listener)
+    val out = try {
+      val rows = collectStatuses(DedupDocs.incrementalIndexed(idx, batchDocs))
+      org.apache.spark.graft.ListenerBridge.waitUntilEmpty(sc)
+      rows
+    } finally sc.removeSparkListener(listener)
+    assert(out.size == 5)
+    assert(jobs.get <= 15, s"bounded admission ran ${jobs.get} Spark jobs")
   }
 
   test("banding parameter is index state: a non-default write still band-matches probes") {
