@@ -1,7 +1,8 @@
 package graft.eval
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.Splits
 
@@ -15,8 +16,10 @@ import graft.ops.Splits
   *   runs/<run_id>/models/<name>/{metrics.json, predictions/ (parquet),
   *                                residuals/ (parquet)}
   *
-  * Metrics are tiny (collected scalars); predictions/residuals stay
-  * distributed and are written as parquet directories.
+  * Metrics are tiny (observed or collected scalars); predictions and
+  * residuals stay distributed and are written as parquet directories.
+  * [[runMultiModel]] shares one cached split across its models and runs
+  * them side by side.
   */
 object Runner {
 
@@ -60,55 +63,70 @@ object Runner {
   final case class ModelResult(name: String, metrics: Metrics.ForecastMetrics,
       calibration: Map[String, Double])
 
-  /** Evaluate one forecaster end-to-end on a pre-built train table.
-    * The split cache is released before returning — the metrics in
-    * ModelResult are already collected, and a caller that re-evaluates
-    * the returned predictions pays one split recompute instead of
-    * leaking a cached frame per model in a long-lived session (the
-    * KnnRegressor lesson). [[runMultiModel]] uses the keep-variant so
-    * the artifact writes reuse the cache first. */
+  /** Evaluate one forecaster end-to-end on a pre-built train table:
+    * split, fit, predict, and both metric sets in one collect. The split
+    * cache is released before returning — the metrics in ModelResult are
+    * already collected, and a caller that re-evaluates the returned
+    * predictions pays one split recompute instead of leaking a cached
+    * frame per model in a long-lived session (the KnnRegressor lesson). */
   def evaluateModel(
       data: DataFrame,
       forecaster: Forecaster,
       cfg: EvalConfig = EvalConfig()): (DataFrame, ModelResult) = {
-    val (preds, res, cached) = evaluateModelKeepingCache(data, forecaster, cfg)
-    cached.unpersist(false)
-    (preds, res)
+    val split = splitOf(data, cfg).cache()
+    try {
+      val predictions = predict(split, forecaster, cfg)
+      (predictions, result(forecaster.name,
+        Metrics.aggregate(predictions, metricColumns)))
+    } finally split.unpersist(false)
   }
 
-  private[eval] def evaluateModelKeepingCache(
-      data: DataFrame,
-      forecaster: Forecaster,
-      cfg: EvalConfig = EvalConfig()): (DataFrame, ModelResult, DataFrame) = {
-    val split = Splits.positional(data, cfg.timeCol, cfg.tiebreakCol, cfg.splitFractions)
-      .cache()
+  private def splitOf(data: DataFrame, cfg: EvalConfig): DataFrame =
+    Splits.positional(data, cfg.timeCol, cfg.tiebreakCol, cfg.splitFractions)
+
+  /** A4 and A5 over the prediction columns, as one aggregate. */
+  private val metricColumns: Seq[Column] =
+    Metrics.forecastColumns() ++ Metrics.calibrationColumns()
+
+  private def result(name: String, values: Map[String, Any]): ModelResult =
+    ModelResult(name, Metrics.forecastResult(values), Metrics.calibrationResult(values))
+
+  /** Fit on the split's train rows, fit sigma on the train residuals
+    * (runner.py:194-196) and return the test rows' predictions, lazily.
+    * withMu (not predictMu directly) so frame-level models — kNN's
+    * neighbor join, GBT's spark.ml transform — run the same path. */
+  private def predict(split: DataFrame, forecaster: Forecaster, cfg: EvalConfig): DataFrame = {
     val train = split.filter(col("split") === "train")
     val test = split.filter(col("split") === "test")
-
     forecaster.fit(train)
-    // uncertainty fitted on TRAIN residuals (runner.py:194-196).
-    // withMu (not predictMu directly) so frame-level models — kNN's
-    // neighbor join, GBT's spark.ml transform — run the same path
     val trainResid = forecaster.withMu(train, "__mu_f").select(
       (col("__mu_f") - col(cfg.labelCol)).as("residual_f"),
       col("lead_hours"))
     val sigma = new Uncertainty.BucketedSigma(cfg.sigmaBuckets,
       floor = cfg.sigmaFloor, sampleStd = cfg.sigmaSampleStd)
     sigma.fit(trainResid)
-
-    val predictions = forecaster.withMu(test, "y_pred_f")
+    forecaster.withMu(test, "y_pred_f")
       .withColumn("y_true_f", col(cfg.labelCol))
       .withColumn("y_pred_sigma_f", sigma.predictSigma())
       .withColumn("model", lit(forecaster.name))
-
-    val m = Metrics.forecastMetrics(predictions)
-    val cal = Metrics.calibrationMetrics(predictions)
-    (predictions, ModelResult(forecaster.name, m, cal), split)
   }
 
-  /** Multi-model comparison: evaluate each, rank ascending by MAE
-    * (report.py:239-283), write artifacts. Returns results in rank order. */
-  /** @param frozenConfigJson richer config to persist as config.json
+  /** Multi-model comparison (report.py:239-283): evaluate each model,
+    * write its artifacts, rank ascending by MAE, write the run files.
+    * Returns results in rank order.
+    *
+    * The split is built once, by one scan, and cached for the call.
+    * Each model then runs in its own lane — fit → sigma → predictions
+    * write → residuals write → slices.json — on a fixed pool of
+    * min(models, defaultParallelism) threads created here, so the lanes
+    * inherit the caller's Spark local properties (job group, tags). A
+    * model's metrics are observed on its predictions write, so they cost
+    * no job of their own. Results come back in forecaster order, which
+    * keeps the ranking deterministic. If a lane fails, the call waits
+    * for every lane and then rethrows the first failure in forecaster
+    * order; no pool thread and no cache outlives the call.
+    *
+    * @param frozenConfigJson richer config to persist as config.json
     *        (the CLI passes its full RunConfig); defaults to the
     *        runner's own EvalConfig JSON so EVERY run — programmatic or
     *        CLI — is reproducible from its artifacts (report.py:51-106)
@@ -119,12 +137,13 @@ object Runner {
       runDir: String,
       cfg: EvalConfig = EvalConfig(),
       frozenConfigJson: Option[String] = None): Seq[ModelResult] = {
-    val results = forecasters.map { f =>
-      val (preds, res, cached) = evaluateModelKeepingCache(data, f, cfg)
-      try writeModelArtifacts(runDir, res, preds, cfg)
-      finally cached.unpersist(false)
-      res
-    }
+    val split = splitOf(data, cfg).cache()
+    val results = try {
+      split.count() // materialize before the lanes share it
+      inLanes(forecasters, data.sparkSession.sparkContext.defaultParallelism) { f =>
+        evaluateAndWrite(split, f, runDir, cfg)
+      }
+    } finally split.unpersist(false)
     val ranked = results.sortBy(_.metrics.mae)
     writeJson(s"$runDir/comparison.json", comparisonJson(ranked))
     writeJson(s"$runDir/config.json", frozenConfigJson.getOrElse(cfg.toJson))
@@ -134,15 +153,53 @@ object Runner {
     ranked
   }
 
-  /** Model names become directory names; anything outside the safe
-    * class is replaced (shared with load-back, which reverses it). */
-  private[eval] def sanitizeModelName(name: String): String =
-    name.replaceAll("[^A-Za-z0-9_()= .-]", "_")
+  /** Run `work` over `items` on min(items, maxLanes) threads created by
+    * this call (so they inherit its thread-local state), returning
+    * results in item order. Every item runs to its end; then the first
+    * failure in item order is rethrown, the later ones suppressed into
+    * it. Every pool thread has exited when this returns. */
+  private def inLanes[A, B](items: Seq[A], maxLanes: Int)(work: A => B): Seq[B] = {
+    val threads = new java.util.concurrent.ConcurrentLinkedQueue[Thread]
+    val lane = new java.util.concurrent.atomic.AtomicInteger
+    val pool = Executors.newFixedThreadPool(math.max(1, math.min(items.size, maxLanes)),
+      (r: Runnable) => {
+        val t = new Thread(r, s"graft-eval-lane-${lane.incrementAndGet()}")
+        t.setDaemon(true)
+        threads.add(t)
+        t
+      })
+    val outcomes = try {
+      val futures = items.map { a =>
+        val task: Callable[B] = () => work(a)
+        pool.submit(task)
+      }
+      futures.map { f =>
+        try Right(f.get())
+        catch { case e: ExecutionException => Left(e.getCause) }
+      }
+    } finally {
+      pool.shutdown()
+      threads.forEach(_.join())
+    }
+    outcomes.collect { case Left(e) => e } match {
+      case first +: rest =>
+        rest.foreach(first.addSuppressed)
+        throw first
+      case _ => outcomes.collect { case Right(b) => b }
+    }
+  }
 
-  private def writeModelArtifacts(
-      runDir: String, res: ModelResult, predictions: DataFrame, cfg: EvalConfig): Unit = {
-    val dir = s"$runDir/models/${sanitizeModelName(res.name)}"
-    predictions.write.mode("overwrite").parquet(s"$dir/predictions")
+  /** One lane: predict, write predictions with both metric sets
+    * observed on that write, then residuals, metrics.json and
+    * slices.json. */
+  private def evaluateAndWrite(
+      split: DataFrame, forecaster: Forecaster, runDir: String, cfg: EvalConfig): ModelResult = {
+    val predictions = predict(split, forecaster, cfg)
+    val dir = s"$runDir/models/${sanitizeModelName(forecaster.name)}"
+    val observed = new Observation()
+    predictions.observe(observed, metricColumns.head, metricColumns.tail: _*)
+      .write.mode("overwrite").parquet(s"$dir/predictions")
+    val res = result(forecaster.name, observed.get)
     predictions
       .select(
         (col("y_pred_f") - col("y_true_f")).as("residual_f"),
@@ -151,7 +208,13 @@ object Runner {
       .write.mode("overwrite").parquet(s"$dir/residuals")
     writeJson(s"$dir/metrics.json", metricsJson(res))
     writeJson(s"$dir/slices.json", slicesJson(predictions, cfg))
+    res
   }
+
+  /** Model names become directory names; anything outside the safe
+    * class is replaced (shared with load-back, which reverses it). */
+  private[eval] def sanitizeModelName(name: String): String =
+    name.replaceAll("[^A-Za-z0-9_()= .-]", "_")
 
   /** Per-dimension slice breakdowns as a JSON array (write_all_artifacts
     * persists sliced metrics per model, report.py:51-106; slices built

@@ -47,16 +47,22 @@ object Uncertainty {
         when(lead >= lo && lead < hi, i).otherwise(acc)
       }
 
+    /** One aggregate: the global sd and, per bucket, the sd and the row
+      * count (a bucket's columns see only its rows; sd skips the nulls
+      * `when` leaves elsewhere). Buckets under minSamples rows keep the
+      * global fallback. */
     def fit(residuals: DataFrame, residCol: String = "residual_f", leadCol: String = "lead_hours"): Unit = {
-      globalSigma = residuals.agg(sd(col(residCol))).collect()(0).getDouble(0)
-      val rows = residuals
-        .withColumn("__b", bucketIdx(col(leadCol)))
-        .filter(col("__b") >= 0)
-        .groupBy(col("__b"))
-        .agg(sd(col(residCol)).as("sd"), count(lit(1)).as("n"))
-        .filter(col("n") >= minSamples)
-        .collect()
-      bucketSigmas = rows.map(r => r.getInt(0) -> r.getDouble(1)).toMap
+      val r = col(residCol)
+      val b = bucketIdx(col(leadCol))
+      val perBucket = buckets.indices.flatMap { i =>
+        Seq(sd(when(b === i, r)).as(s"sd_$i"), count(when(b === i, lit(1))).as(s"n_$i"))
+      }
+      val row = residuals.agg(sd(r).as("sd"), perBucket: _*).collect()(0)
+      globalSigma = row.getDouble(0)
+      bucketSigmas = buckets.indices.flatMap { i =>
+        val n = row.getLong(2 + 2 * i)
+        if (n >= minSamples && n > 0) Some(i -> row.getDouble(1 + 2 * i)) else None
+      }.toMap
     }
 
     def predictSigma(leadCol: String = "lead_hours"): Column = {

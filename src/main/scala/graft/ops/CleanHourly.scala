@@ -61,11 +61,14 @@ object CleanHourly {
 
   /** The full stage. Input validation is structure-only (the range step
     * below is what fixes out-of-range values); output validation is the
-    * full contract including key uniqueness. */
+    * full contract except key uniqueness, which [[dedup]] guarantees by
+    * construction (row_number() == 1 per (station_id, ts_utc), and the
+    * flag steps only add columns) — checking it again would cost a
+    * groupBy job over the whole lineage. */
   def apply(df: DataFrame, spikeThreshold: Double = 15.0): DataFrame = {
     val validated = graft.schemas.Checks.validateHourlyObsStructure(df)
     val cleaned = flagSpikes(
       flagOutOfRange(flagMissing(dedup(validated))), spikeThreshold)
-    graft.schemas.Checks.validateHourlyObs(cleaned, requireUniqueKeys = true)
+    graft.schemas.Checks.validateHourlyObs(cleaned, requireUniqueKeys = false)
   }
 }

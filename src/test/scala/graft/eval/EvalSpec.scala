@@ -1,6 +1,7 @@
 package graft.eval
 
 import graft.SparkSpec
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Metrics micro-cases (tests/test_eval.py:225-261), ridge closed-form
@@ -103,5 +104,61 @@ class EvalSpec extends SparkSpec {
       .toDF("slice", "y_pred_f", "y_true_f")
     val out = Metrics.metricsBySlices(df, Seq("slice"), minCount = 10).collect()
     assert(out.length == 1 && out(0).getAs[String]("slice") == "A") // B has n=1 < 10
+  }
+
+  test("sliced metrics leave a user's __slices_in view alone and match the SQL spelling") {
+    val df = (1 to 60).map { i =>
+      (if (i % 3 == 0) "KLGA" else "KJFK", if (i % 2 == 0) 24 else 48, 70.0 + i % 5, 70.0 + i % 7)
+    }.toDF("station_id", "lead_hours", "y_pred_f", "y_true_f").repartition(3)
+    spark.range(7).createOrReplaceTempView("__slices_in")
+    try {
+      val got = Metrics.metricsBySlices(df, Seq("station_id", "lead_hours"), minCount = 12)
+      val rows = got.collect().toSeq
+      assert(spark.table("__slices_in").count() == 7) // the user's view survived
+      // the earlier spelling: a temp view and a GROUPING SETS query
+      df.withColumn("__e", $"y_pred_f" - $"y_true_f").createOrReplaceTempView("__slices_ref")
+      val ref = spark.sql(
+        """SELECT coalesce(CAST(station_id AS STRING), 'ALL') AS station_id,
+          |  coalesce(CAST(lead_hours AS STRING), 'ALL') AS lead_hours,
+          |  count(*) AS n,
+          |  round(avg(abs(__e)), 4) AS mae,
+          |  round(sqrt(avg(__e * __e)), 4) AS rmse,
+          |  round(avg(__e), 4) AS bias
+          |FROM __slices_ref
+          |GROUP BY GROUPING SETS ((station_id), (lead_hours))
+          |HAVING count(*) >= 12""".stripMargin)
+      assert(got.schema == ref.schema)
+      assert(rows.sortBy(_.toString) == ref.collect().toSeq.sortBy(_.toString))
+      assert(rows.size == 4 && rows.forall(r => r.getString(0) == "ALL" || r.getString(1) == "ALL"))
+    } finally {
+      spark.catalog.dropTempView("__slices_in")
+      spark.catalog.dropTempView("__slices_ref")
+    }
+  }
+
+  test("bucketed sigma's one aggregate equals a global + groupBy reference on many partitions") {
+    val resid = spark.range(0, 2000, 1, 4).select(
+      (sin($"id" * 0.37) * 5.0 + ($"id" % 11) * 0.1).as("residual_f"),
+      ($"id" % 130).cast("int").as("lead_hours"))
+    val buckets = Seq((0, 36), (36, 72), (72, 120))
+    for (sampleStd <- Seq(true, false); minSamples <- Seq(10, 600)) {
+      val m = new Uncertainty.BucketedSigma(buckets, minSamples = minSamples, sampleStd = sampleStd)
+      m.fit(resid)
+      val (gotBuckets, gotGlobal) = m.fitted
+      // reference: the two queries fit used to run
+      val sd: Column => Column =
+        if (sampleStd) stddev_samp else stddev_pop
+      val refGlobal = resid.agg(sd($"residual_f")).collect()(0).getDouble(0)
+      val idx = buckets.zipWithIndex.foldLeft(lit(-1)) { case (acc, ((lo, hi), i)) =>
+        when($"lead_hours" >= lo && $"lead_hours" < hi, i).otherwise(acc)
+      }
+      val refBuckets = resid.withColumn("__b", idx).filter($"__b" >= 0)
+        .groupBy($"__b").agg(sd($"residual_f").as("sd"), count(lit(1)).as("n"))
+        .filter($"n" >= minSamples).collect()
+        .map(r => r.getInt(0) -> r.getDouble(1)).toMap
+      assert(math.abs(gotGlobal - refGlobal) <= 1e-12)
+      assert(gotBuckets.keySet == refBuckets.keySet)
+      gotBuckets.foreach { case (i, s) => assert(math.abs(s - refBuckets(i)) <= 1e-12, s"bucket $i") }
+    }
   }
 }

@@ -2,6 +2,8 @@ package graft.eval
 
 import java.nio.file.{Files, Paths}
 import java.sql.{Date, Timestamp}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import graft.SparkSpec
 
 /** Multi-model E2E: synthetic forecast/truth, Persistence + Ridge,
@@ -118,5 +120,100 @@ class RunnerSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Runner.loadMultiModelRun(spark, root, "run_999")
     }
+  }
+
+  private def threeModels() = Seq[Forecaster](
+    new Passthrough(),
+    new Persistence(),
+    new Ridge(Seq("tmax_pred_f"), "tmax_actual_f", alpha = 1.0))
+
+  private def laneThreads() =
+    Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(t => t.getName.startsWith("graft-eval-lane-") && t.isAlive)
+
+  /** Spark jobs `body` starts, as the properties each job carried. */
+  private def jobsOf[A](body: => A): (A, Seq[java.util.Properties]) = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).getOrElse(new java.util.Properties))
+    }
+    org.apache.spark.graft.ListenerBridge.waitUntilEmpty(sc)
+    sc.addSparkListener(listener)
+    val out = try {
+      val a = body
+      org.apache.spark.graft.ListenerBridge.waitUntilEmpty(sc)
+      a
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    (out, seen.asScala.toSeq)
+  }
+
+  test("concurrent lanes equal a serial evaluateModel of each model, metric for metric") {
+    val runDir = Files.createTempDirectory("graft_run_par").toString
+    val ranked = Runner.runMultiModel(trainTable, threeModels(), runDir)
+    val serial = threeModels().map(m => Runner.evaluateModel(trainTable, m)._2)
+    assert(ranked.map(_.name).toSet == serial.map(_.name).toSet)
+    for (s <- serial) {
+      val r = ranked.find(_.name == s.name).get
+      assert(r.metrics == s.metrics, s.name)
+      assert(r.calibration == s.calibration, s.name)
+    }
+    // metrics.json carries the observed numbers
+    val back = Runner.loadMultiModelRun(spark,
+      Paths.get(runDir).getParent.toString, Paths.get(runDir).getFileName.toString)
+    for (s <- serial) {
+      val m = back.models(s.name).metrics
+      assert(m("mae") == s.metrics.mae && m("n") == s.metrics.n.toDouble)
+      assert(m("coverage_80") == s.calibration("coverage_80"))
+    }
+  }
+
+  test("a failing lane is rethrown after every lane ends, leaving no thread or cache") {
+    val runDir = Files.createTempDirectory("graft_run_fail").toString
+    val boom = new Forecaster {
+      val name = "Boom"
+      def fit(train: DataFrame): Unit =
+        throw new IllegalStateException("fit failed on purpose")
+      def predictMu = col("tmax_pred_f")
+    }
+    // a slow lane: still writing when Boom has already failed
+    val slow = new Forecaster {
+      val name = "Slow"
+      def fit(train: DataFrame): Unit = Thread.sleep(1500)
+      def predictMu = col("tmax_pred_f")
+    }
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[IllegalStateException] {
+      Runner.runMultiModel(trainTable, Seq[Forecaster](boom, slow, new Passthrough()), runDir)
+    }
+    assert(e.getMessage == "fit failed on purpose")
+    for (m <- Seq("Slow", "Passthrough"))
+      assert(Files.exists(Paths.get(s"$runDir/models/$m/slices.json")), m)
+    assert(!Files.exists(Paths.get(s"$runDir/comparison.json")))
+    assert(laneThreads().isEmpty)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore).isEmpty)
+  }
+
+  test("every job of a run carries the caller's local properties, and no lane outlives it") {
+    val sc = spark.sparkContext
+    val runDir = Files.createTempDirectory("graft_run_props").toString
+    sc.setLocalProperty("graft.spec.caller", "runner-lanes")
+    val (_, jobs) = try jobsOf(Runner.runMultiModel(trainTable, threeModels(), runDir))
+      finally sc.setLocalProperty("graft.spec.caller", null)
+    assert(jobs.nonEmpty)
+    assert(jobs.forall(_.getProperty("graft.spec.caller") == "runner-lanes"))
+    assert(laneThreads().isEmpty)
+  }
+
+  test("a three-model run stays within its Spark job budget") {
+    // 31 jobs when each model re-built the split, fitted sigma in two
+    // aggregates and collected both metric sets; 19 with the shared
+    // split, one sigma aggregate and metrics observed on the write
+    val runDir = Files.createTempDirectory("graft_run_jobs").toString
+    val (ranked, jobs) = jobsOf(Runner.runMultiModel(trainTable, threeModels(), runDir))
+    assert(ranked.size == 3)
+    assert(jobs.size <= 19, s"runMultiModel ran ${jobs.size} Spark jobs")
   }
 }

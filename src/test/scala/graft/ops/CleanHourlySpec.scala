@@ -80,4 +80,31 @@ class CleanHourlySpec extends SparkSpec {
     val twice = CleanHourly(once)
     assert(once.orderBy("ts_utc").collect().toSeq == twice.orderBy("ts_utc").collect().toSeq)
   }
+
+  test("the full stage emits unique (station, ts) keys from planted duplicates") {
+    // apply() no longer runs the uniqueness groupBy: dedup must hold it
+    // by construction, including ties on source and null-vs-reading ties
+    def row(ts: String, st: String, t: Option[Double], src: String) =
+      (Timestamp.valueOf(ts), st, Option(40.78), Option(-73.87), t, src, 0L)
+    val df = Seq(
+      row("2024-07-01 00:00:00", "KLGA", None, "isd"),        // tie on source,
+      row("2024-07-01 00:00:00", "KLGA", Some(20.0), "isd"),  // null vs reading
+      row("2024-07-01 00:00:00", "KLGA", Some(20.0), "isd"),  // exact copy
+      row("2024-07-01 00:00:00", "KJFK", Some(18.0), "isd"),  // same ts, other station
+      row("2024-07-01 01:00:00", "KLGA", None, "isd"),        // all-null tie
+      row("2024-07-01 01:00:00", "KLGA", None, "isd"),
+      row("2024-07-01 02:00:00", "KLGA", Some(22.0), "zzz"),
+      row("2024-07-01 02:00:00", "KLGA", Some(21.0), "aaa"),
+      row("2024-07-01 02:00:00", "KLGA", Some(23.0), "zzz")
+    ).toDF("ts_utc", "station_id", "lat", "lon", "temp_c", "source", "qc_flags")
+      .repartition(3)
+    val out = CleanHourly(df).collect()
+    val keys = out.map(r => (r.getAs[String]("station_id"), r.getAs[Timestamp]("ts_utc")))
+    assert(out.length == 4 && keys.distinct.length == 4)
+    val temp = out.map(r => (r.getAs[String]("station_id"), r.getAs[Timestamp]("ts_utc").toString) ->
+      Option(r.getAs[java.lang.Double]("temp_c")).map(_.doubleValue)).toMap
+    assert(temp(("KLGA", "2024-07-01 00:00:00.0")) == Some(20.0)) // the reading beats null
+    assert(temp(("KLGA", "2024-07-01 01:00:00.0")).isEmpty)
+    assert(temp(("KLGA", "2024-07-01 02:00:00.0")) == Some(21.0)) // source order first
+  }
 }
