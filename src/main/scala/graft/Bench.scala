@@ -107,8 +107,8 @@ object Bench {
     "a57_mcnemar",         // paired discordant-cell test (exact integers)
     "o27_hilbert_key",     // 16-step Hilbert walk key (locality layout)
     "o28_hll_sketch_table", // persisted per-day HLL sketches + range union
-    "o29_kll_sketch_table", // custom KLL aggregates: stored quantile sketches
-    "o30_theta_audience_overlap", // theta set-op sketches: stored ∩ / ∖
+    "o29_kll_sketch_table", // built-in KLL sketches: stored quantile sketches
+    "o30_theta_audience_overlap", // built-in theta sketches: stored ∩ / ∖
     "o26_skew_audit",      // join-key skew stats + strategy recommendation
     "a58_pr_curve",        // threshold-sweep confusion cells + P/R/F1
     "dedup_lsh_eval",      // banding recall vs exact-Jaccard ground truth

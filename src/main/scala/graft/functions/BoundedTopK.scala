@@ -26,6 +26,10 @@ import org.apache.spark.sql.expressions.Aggregator
   * runs only when the buffer hits 2k — amortized O(log k) per row,
   * and the invariant "no buffer ever exceeds 2k entries" bounds both
   * memory and shuffle width.
+  *
+  * Kept because Spark 4.1.2 has no score-ordered grouped top-k:
+  * `approx_top_k` ranks items by approximate FREQUENCY, and `max_by`
+  * keeps one row, so neither yields the (score DESC, id ASC) k rows.
   */
 object BoundedTopK {
 

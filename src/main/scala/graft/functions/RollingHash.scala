@@ -73,26 +73,11 @@ object RollingHash {
 
 /** Function registration: via SparkSessionExtensions (the library's
   * extension entry point — `spark.sql.extensions=graft.functions.GraftExtensions`)
-  * or imperatively with `GraftFunctions.register(spark)`. */
+  * or imperatively with `GraftFunctions.register(spark)`. Both install
+  * exactly `GraftFunctions.descriptors`. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftFunctions.rollingHashDescriptor)
-    ext.injectFunction(VecDot.descriptor)
-    ext.injectFunction(MinHashSig.descriptor)
-    ext.injectFunction(TrigramStats.descriptor)
-    ext.injectFunction(SimHash32.descriptor)
-    ext.injectFunction(VecL2Sq.descriptor)
-    ext.injectFunction(HilbertIndex2.descriptor)
-    ext.injectFunction(HilbertIndex3.descriptor)
-    ext.injectFunction(WinnowAnchors.descriptor)
-    ext.injectFunction(KllSketchFns.sketchAggDescriptor)
-    ext.injectFunction(KllSketchFns.unionAggDescriptor)
-    ext.injectFunction(KllSketchFns.quantileDescriptor)
-    ext.injectFunction(ThetaSketchFns.sketchAggDescriptor)
-    ext.injectFunction(ThetaSketchFns.unionAggDescriptor)
-    ext.injectFunction(ThetaSketchFns.estimateDescriptor)
-    ext.injectFunction(ThetaSketchFns.intersectDescriptor)
-    ext.injectFunction(ThetaSketchFns.aNotBDescriptor)
+    GraftFunctions.descriptors.foreach(ext.injectFunction)
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
     ext.injectOptimizerRule(_ => graft.plans.AsofJoinOptimizations)
     // opt-in: rewrites interval-overlap theta-joins to the binned
@@ -102,8 +87,9 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
 }
 
 object GraftFunctions {
-  private[functions] val rollingHashDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
+  type Descriptor = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
+
+  private[functions] val rollingHashDescriptor: Descriptor = (
     FunctionIdentifier("rolling_hash"),
     new ExpressionInfo(classOf[RollingHash].getName, "rolling_hash"),
     (children: Seq[Expression]) => {
@@ -112,22 +98,23 @@ object GraftFunctions {
       RollingHash(children.head)
     })
 
+  /** Every SQL function the engine ships. No name may shadow a Spark
+    * built-in: the extension path would override the built-in while
+    * `register` would skip it, so the same SQL would run different code
+    * per session (`GraftExtensionsSpec` checks the list against
+    * `FunctionRegistry.builtin`). */
+  val descriptors: Seq[Descriptor] = Seq(
+    rollingHashDescriptor, VecDot.descriptor, MinHashSig.descriptor,
+    TrigramStats.descriptor, SimHash32.descriptor, VecL2Sq.descriptor,
+    HilbertIndex2.descriptor, HilbertIndex3.descriptor,
+    WinnowAnchors.descriptor)
+
   /** Idempotent imperative registration for sessions built without the
     * extension (tests, Verify, Bench). */
-  def register(spark: SparkSession): Unit = {
-    Seq(rollingHashDescriptor, VecDot.descriptor, MinHashSig.descriptor,
-      TrigramStats.descriptor, SimHash32.descriptor, VecL2Sq.descriptor,
-      HilbertIndex2.descriptor, HilbertIndex3.descriptor,
-      WinnowAnchors.descriptor, KllSketchFns.sketchAggDescriptor,
-      KllSketchFns.unionAggDescriptor, KllSketchFns.quantileDescriptor,
-      ThetaSketchFns.sketchAggDescriptor, ThetaSketchFns.unionAggDescriptor,
-      ThetaSketchFns.estimateDescriptor, ThetaSketchFns.intersectDescriptor,
-      ThetaSketchFns.aNotBDescriptor)
-      .foreach { case (ident, info, builder) =>
+  def register(spark: SparkSession): Unit =
+    descriptors.foreach { case (ident, info, builder) =>
       if (!spark.sessionState.functionRegistry.functionExists(ident)) {
         spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
       }
     }
-  }
-
 }

@@ -34,6 +34,9 @@ import org.apache.spark.sql.functions._
   * model state, not data) and re-enters the plan as an array literal.
   * That holds to ~2²⁷ bits (16 MB literal); past it, ship the words as
   * a broadcast variable and probe via a join on word index instead.
+  *
+  * Kept because Spark 4.1.2 registers no Bloom-filter SQL function, and
+  * the `text_decontaminate_bloom` oracle rebuilds these exact words.
   */
 object Bloom {
 

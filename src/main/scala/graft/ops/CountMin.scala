@@ -33,6 +33,10 @@ import org.apache.spark.sql.functions._
   *
   * The matrix collects to the driver as model state (d·w·8 bytes —
   * 256 KB at d=4, w=8192) and re-enters the plan as array literals.
+  *
+  * Kept over Spark's `count_min_sketch`, which returns an opaque binary
+  * under its own seeded hash and has no SQL probe: the
+  * `text_cms_heavy_hitters` oracle rebuilds these exact cells in DuckDB.
   */
 object CountMin {
 

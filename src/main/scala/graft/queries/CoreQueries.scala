@@ -615,45 +615,45 @@ object CoreQueries {
     ),
 
     // O29: persisted QUANTILE sketch table — o28's pattern for
-    // percentiles, which Spark cannot express at all in stored form:
-    // approx_percentile answers one in-flight query but its sketch
-    // neither persists nor merges. The custom KLL aggregates
-    // (functions/KllSketch.scala — TypedImperativeAggregates over the
-    // datasketches KllDoublesSketch already on Spark's classpath) fix
-    // that: one sketch per day persisted as a parquet binary column,
-    // any date-range percentile = kll_union_agg over the stored rows +
-    // kll_quantile — |days| rows scanned, never an event re-scan. KLL's
-    // guarantee is a NORMALIZED RANK error (k=200 → ε ≈ 1.65%), so the
-    // contract gate brackets each sketch quantile between the EXACT
-    // percentiles at q ∓ 3% (KLL compaction is internally randomized,
-    // so the margin over ε keeps re-runs deterministic w.h.p.): both engines emit the exact p50/p95
-    // (floor-rounded), Spark additionally checks its union-sketch
+    // percentiles. approx_percentile answers one in-flight query but its
+    // sketch neither persists nor merges; Spark's KLL built-ins do:
+    // kll_sketch_agg_double folds one sketch per day, persisted as a
+    // parquet binary column, and any date-range percentile is
+    // kll_merge_agg_double over the stored rows +
+    // kll_sketch_get_quantile_double — |days| rows scanned, never an
+    // event re-scan. KLL's guarantee is a NORMALIZED RANK error (k=200 →
+    // ε ≈ 1.65%), so the contract gate brackets each sketch quantile
+    // between the EXACT percentiles at q ∓ 3% (KLL compaction is
+    // internally randomized, so the margin over ε keeps re-runs
+    // deterministic w.h.p.): both engines emit the exact p50/p95
+    // (floor-rounded), Spark additionally checks its merged-sketch
     // values sit inside the rank bracket and the oracle asserts the
     // booleans — a wrong merge, rank-criteria drift, or a truncated
     // binary round-trip lands outside the bracket and fails the hash.
+    // (events.value is never null; an all-null day would store an EMPTY
+    // sketch, which merges fine but has no quantile to read.)
     OracleQuery(
       "o29_kll_sketch_table",
       (s, d) => {
         import s.implicits._
-        graft.functions.GraftFunctions.register(s)
         val ev = Tables.events(s, d)
           .select($"value", date_trunc("week", $"ts").as("wk"),
             to_date($"ts").as("day"))
         val dir = graft.core.Scratch.dir("kll_sketches", d)
         ev.groupBy($"wk", $"day")
-          .agg(expr("kll_sketch_agg(value, 200)").as("sk"))
+          .agg(expr("kll_sketch_agg_double(value, 200)").as("sk"))
           .write.mode("overwrite").parquet(dir)
         val sk = s.read.parquet(dir)
         def grain(df: org.apache.spark.sql.DataFrame) = df.select(
           (coalesce(date_format($"wk", "yyyy-MM-dd"), lit("total")).as("grain") +:
             df.columns.filter(_ != "wk").map(col)): _*)
         val unions = grain(
-          sk.groupBy($"wk").agg(expr("kll_union_agg(sk, 200)").as("u"))
-            .unionByName(sk.agg(expr("kll_union_agg(sk, 200)").as("u"))
+          sk.groupBy($"wk").agg(expr("kll_merge_agg_double(sk)").as("u"))
+            .unionByName(sk.agg(expr("kll_merge_agg_double(sk)").as("u"))
               .select(lit(null).cast("timestamp").as("wk"), $"u")))
           .select($"grain",
-            expr("kll_quantile(u, 0.5d)").as("sk50"),
-            expr("kll_quantile(u, 0.95d)").as("sk95"))
+            expr("kll_sketch_get_quantile_double(u, 0.5d)").as("sk50"),
+            expr("kll_sketch_get_quantile_double(u, 0.95d)").as("sk95"))
         // exact percentiles at the gate points AND the rank brackets
         val qs = "array(0.47d, 0.5d, 0.53d, 0.92d, 0.95d, 0.98d)"
         val exact = grain(
@@ -691,19 +691,17 @@ object CoreQueries {
     // answer INTERSECTION and DIFFERENCE cardinalities — "users who
     // did X AND Y" (audience overlap, cohort algebra, benchmark-
     // contamination user sets) — from |segments| sketch rows, never an
-    // event re-scan. Custom theta aggregates/scalars
-    // (functions/ThetaSketch.scala; the aggregation buffer is a theta
-    // Union, which accepts both raw key updates and sketch merges and
-    // serializes losslessly between partials). Below 2^lgK=4096
-    // uniques a theta sketch is EXACT; past it, intersections carry
-    // the widest error — the gate brackets at max(2, 5%) so the row
-    // stays deterministic at every sf the driver runs. Exact sides are
-    // one distinct-collapse + one self-join on user — both engines.
+    // event re-scan. Spark's theta built-ins (theta_sketch_agg,
+    // theta_intersection, theta_difference, theta_sketch_estimate).
+    // Below 2^lgK=4096 uniques a theta sketch is EXACT; past it,
+    // intersections carry the widest error — the gate brackets at
+    // max(2, 5%) so the row stays deterministic at every sf the driver
+    // runs. Exact sides are one distinct-collapse + one self-join on
+    // user — both engines.
     OracleQuery(
       "o30_theta_audience_overlap",
       (s, d) => {
         import s.implicits._
-        graft.functions.GraftFunctions.register(s)
         val ev = Tables.events(s, d)
           .select($"event_type".as("t"), $"user_id".as("u")).distinct()
         val dir = graft.core.Scratch.dir("theta_sketches", d)
@@ -714,8 +712,8 @@ object CoreQueries {
         val est = sk.as("a").crossJoin(sk.as("b")) // 5×5 sketch rows
           .filter(col("a.t") < col("b.t"))
           .select(col("a.t").as("t1"), col("b.t").as("t2"),
-            expr("theta_estimate(theta_intersect(a.sk, b.sk))").as("e_both"),
-            expr("theta_estimate(theta_a_not_b(a.sk, b.sk))").as("e_only_a"))
+            expr("theta_sketch_estimate(theta_intersection(a.sk, b.sk))").as("e_both"),
+            expr("theta_sketch_estimate(theta_difference(a.sk, b.sk))").as("e_only_a"))
         val sizes = ev.groupBy($"t").agg(count(lit(1)).as("n"))
         val both = ev.as("a").join(ev.as("b"),
             col("a.u") === col("b.u") && col("a.t") < col("b.t"))

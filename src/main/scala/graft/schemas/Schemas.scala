@@ -87,14 +87,3 @@ object Schemas {
     StructField("rmse_30d", DoubleType),
     StructField("sigma_lead", DoubleType)))
 }
-
-/** Station dimension record (stations.csv — always broadcast). */
-final case class StationMeta(
-    stationId: String,
-    usaf: String,
-    wban: String,
-    ghcnId: String,
-    name: String,
-    lat: Double,
-    lon: Double,
-    tz: String)

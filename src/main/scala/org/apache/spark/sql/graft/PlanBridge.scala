@@ -19,13 +19,13 @@ object PlanBridge {
     * stable expression ids. */
   def analyzed(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
 
-  /** What a `spark.sql.extensions` entry would register: the function
-    * names injected into a fresh registry. Lets specs verify the
+  /** What a `spark.sql.extensions` entry would register: each injected
+    * function name and the class it resolves to. Lets specs verify the
     * extension wiring without building a second SparkSession. */
-  def injectedFunctionNames(ext: org.apache.spark.sql.SparkSessionExtensions): Seq[String] = {
+  def injectedFunctions(ext: org.apache.spark.sql.SparkSessionExtensions): Map[String, String] = {
     val reg = new org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry
     ext.registerFunctions(reg)
-    reg.listFunction().map(_.funcName)
+    reg.listFunction().map(id => id.funcName -> reg.lookupFunction(id).get.getClassName).toMap
   }
 
   /** The planner strategies an extensions entry point injects. */

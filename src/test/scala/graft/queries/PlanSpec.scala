@@ -605,12 +605,17 @@ class PlanSpec extends SparkSpec {
     // the whole point of o28/o29: after the sketch table is built, the
     // union query's scan set is the sketch dir — one parquet scan, no
     // events path in the plan
-    val q = Registry.queries("o28_hll_sketch_table")(spark, sf)
-    q.collect() // builds + persists the sketch table as a side effect
-    val sk = spark.read.parquet(graft.core.Scratch.path("hll_sketches", sf))
-    val p = plan(sk.agg(expr("hll_sketch_estimate(hll_union_agg(sk, false))")))
-    val scans = "Scan parquet".r.findAllIn(p).size
-    assert(scans == 1 && !p.contains("events"), s"union must scan sketches only:\n$p")
+    for ((q, tag, union) <- Seq(
+        ("o28_hll_sketch_table", "hll_sketches",
+          "hll_sketch_estimate(hll_union_agg(sk, false))"),
+        ("o29_kll_sketch_table", "kll_sketches",
+          "kll_sketch_get_quantile_double(kll_merge_agg_double(sk), 0.5d)"))) {
+      Registry.queries(q)(spark, sf).collect() // builds + persists the sketch table
+      val sk = spark.read.parquet(graft.core.Scratch.path(tag, sf))
+      val p = plan(sk.agg(expr(union)))
+      val scans = "Scan parquet".r.findAllIn(p).size
+      assert(scans == 1 && !p.contains("events"), s"$q union must scan sketches only:\n$p")
+    }
   }
 
   test("DP release and k-anonymity audit: one fact scan, noise/flags on the group frame") {

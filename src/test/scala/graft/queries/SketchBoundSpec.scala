@@ -104,4 +104,18 @@ class SketchBoundSpec extends SparkSpec {
         s"${r.getAs[String]("event_type")}: $r")
     }
   }
+
+  test("o29/o30: stored KLL and theta sketch gate booleans all true at sf0.001") {
+    val sf = "/root/testdata/sf0.001"
+    // o29 never stores an all-null day's EMPTY sketch (KllSketchSpec)
+    assert(graft.core.Tables.events(spark, sf).filter("value IS NULL").isEmpty)
+    for ((q, oks) <- Seq(
+        "o29_kll_sketch_table" -> Seq("p50_ok", "p95_ok"),
+        "o30_theta_audience_overlap" -> Seq("inter_ok", "diff_ok"))) {
+      val rows = Registry.queries(q)(spark, sf).collect()
+      assert(rows.nonEmpty, q)
+      assert(rows.head.schema.fieldNames.filter(_.endsWith("_ok")).toSeq == oks, q)
+      rows.foreach(r => oks.foreach(c => assert(r.getAs[Boolean](c), s"$q $c: $r")))
+    }
+  }
 }
