@@ -134,7 +134,7 @@ object Pipeline {
       val corpus = spark.read.parquet(corpusDir)
       graft.ops.DedupIndex.write(corpus, indexDir)
       val n = corpus.count()
-      val fps = spark.read.parquet(s"$indexDir/fps").count()
+      val fps = graft.ops.DedupIndex.read(spark, indexDir).fps.count()
       println(s"[graft] dedup-index: indexed $n corpus docs ($fps fingerprints) → $indexDir")
 
     case "dedup-admit" :: indexDir :: batchDir :: outDir :: Nil =>
@@ -168,7 +168,7 @@ object Pipeline {
       println(s"[graft] dedup-admit: $byStatus → $outDir (index updated)")
 
     case "dedup-compact" :: indexDir :: Nil =>
-      // offline maintenance: merge append generations back into
+      // offline maintenance: merge appended files back into
       // fully-sorted tables so footer pruning holds index-wide again
       graft.ops.DedupIndex.compact(spark, indexDir)
       println(s"[graft] dedup-compact: re-sorted index tables at $indexDir")

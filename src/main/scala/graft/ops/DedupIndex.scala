@@ -3,15 +3,20 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Commit
+
 /** Persisted dedup-admission index — the write-once derivable columns
   * of a kept corpus, stored AT ADMISSION so that incremental
   * batch-vs-corpus dedup ([[DedupDocs.incrementalIndexed]]) joins
   * precomputed state instead of re-hashing the corpus text on every
   * batch:
   *
-  *   dir/fps    (doc_id, fp)      content fingerprint, md5 of text
-  *   dir/bands  (doc_id, bucket)  MinHash-LSH band buckets
-  *   dir/grams  (doc_id, gram)    distinct 60-bit trigram hashes
+  *   fps    (doc_id, fp)      content fingerprint, md5 of text
+  *   bands  (doc_id, bucket)  MinHash-LSH band buckets
+  *   grams  (doc_id, gram)    distinct 60-bit trigram hashes
+  *   meta   (rows_per_band)   the banding the buckets were hashed with
+  *
+  * The four are one generation of `dir` ([[graft.core.Commit]]).
   *
   * Each table is written range-partitioned and row-group-sorted by its
   * JOIN key (fp / bucket / doc_id), so a batch's probe of a 100 TB
@@ -24,8 +29,8 @@ import org.apache.spark.sql.functions._
   * `append` is the steady-state maintenance op: after a batch is
   * admitted, ONLY the admitted docs' rows are appended — the index is
   * never rebuilt. Appended files carry the same per-file sort, so
-  * pruning holds within every generation of files; compact
-  * generations offline (re-run [[write]]) when file counts grow.
+  * pruning holds within every append's files; [[compact]] offline
+  * when file counts grow.
   *
   * Derivation cost: [[build]] scans the doc text once per table (three
   * narrow map-side passes at admission time, amortized over every
@@ -56,24 +61,25 @@ object DedupIndex {
       rowsPerBand = rowsPerBand)
   }
 
-  /** Write a fresh index for a kept corpus (overwrites `dir`).
-    * `rowsPerBand` persists in `dir/meta`; [[append]] and [[read]]
+  /** Write a fresh index for a kept corpus as a new generation of
+    * `dir`. `rowsPerBand` persists in `meta`; [[append]] and [[read]]
     * take it from there, never from a caller. */
   def write(docs: DataFrame, dir: String, rowsPerBand: Int = 4): Unit = {
-    writeFrames(build(docs, rowsPerBand), dir, SaveMode.Overwrite)
     val spark = docs.sparkSession
-    import spark.implicits._
-    Seq(rowsPerBand).toDF("rows_per_band")
-      .repartition(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/meta")
+    Commit.newGeneration(spark, dir) { gen =>
+      writeFrames(build(docs, rowsPerBand), gen, SaveMode.Overwrite)
+      writeMeta(spark, gen, rowsPerBand)
+    }
   }
 
   /** Append the index rows of newly ADMITTED docs — the per-batch
     * maintenance op; existing index files are untouched and the new
     * rows are banded with the STORED rowsPerBand (a caller cannot
-    * desynchronize generations). */
+    * desynchronize appends). */
   def append(admitted: DataFrame, dir: String): Unit = {
-    val rpb = storedRowsPerBand(admitted.sparkSession, dir)
-    writeFrames(build(admitted, rpb), dir, SaveMode.Append)
+    val live = Commit.current(admitted.sparkSession, dir)
+    val rpb = storedRowsPerBand(admitted.sparkSession, live)
+    writeFrames(build(admitted, rpb), live, SaveMode.Append)
   }
 
   private def writeFrames(f: Frames, dir: String, mode: SaveMode): Unit = {
@@ -93,41 +99,40 @@ object DedupIndex {
     sortedCached(f.grams, "grams", Seq("doc_id", "gram"))
   }
 
-  /** Compact append generations: re-sort and rewrite each table by its
+  /** Compact appended files: re-sort and rewrite each table by its
     * join key so footer-stat pruning holds across the WHOLE index
-    * again, not just within each generation's files. Offline
-    * maintenance — run when the file count per table grows past what
-    * the probe's file-listing budget tolerates. Rewrites into a
-    * temporary sibling first so a crash mid-compaction leaves the live
-    * index untouched (the final directory swap is per-table). */
+    * again, not just within each append's files. Offline maintenance —
+    * run when the file count per table grows past what the probe's
+    * file-listing budget tolerates. The rewrite lands as one new
+    * generation; an [[append]] must not run concurrently. */
   def compact(spark: SparkSession, dir: String): Unit = {
-    val rpb = storedRowsPerBand(spark, dir)
-    Seq("fps" -> Seq("fp"), "bands" -> Seq("bucket"), "grams" -> Seq("doc_id", "gram"))
-      .foreach { case (t, keys) =>
-        val tmp = s"$dir/.compact_$t"
-        graft.sources.Sinks.writeSortedBy(
-          spark.read.parquet(s"$dir/$t"), tmp, keys)
-        // atomic-enough swap on a filesystem with cheap renames; object
-        // stores would stage generations behind a manifest instead
-        val fs = new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$t"), true)
-        fs.rename(new org.apache.hadoop.fs.Path(tmp),
-          new org.apache.hadoop.fs.Path(s"$dir/$t"))
-      }
-    // meta is tiny and generation-free; rewrite for completeness
+    val live = Commit.current(spark, dir)
+    val rpb = storedRowsPerBand(spark, live)
+    Commit.newGeneration(spark, dir) { gen =>
+      Seq("fps" -> Seq("fp"), "bands" -> Seq("bucket"), "grams" -> Seq("doc_id", "gram"))
+        .foreach { case (t, keys) =>
+          graft.sources.Sinks.writeSortedBy(spark.read.parquet(s"$live/$t"), s"$gen/$t", keys)
+        }
+      writeMeta(spark, gen, rpb)
+    }
+  }
+
+  private def writeMeta(spark: SparkSession, dir: String, rowsPerBand: Int): Unit = {
     import spark.implicits._
-    Seq(rpb).toDF("rows_per_band")
+    Seq(rowsPerBand).toDF("rows_per_band")
       .repartition(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/meta")
   }
 
-  private def storedRowsPerBand(spark: SparkSession, dir: String): Int =
-    spark.read.parquet(s"$dir/meta").head.getInt(0)
+  private def storedRowsPerBand(spark: SparkSession, live: String): Int =
+    spark.read.parquet(s"$live/meta").head.getInt(0)
 
   /** Open a stored index (banding parameter from the stored meta). */
-  def read(spark: SparkSession, dir: String): Frames = Frames(
-    fps = spark.read.parquet(s"$dir/fps"),
-    bands = spark.read.parquet(s"$dir/bands"),
-    grams = spark.read.parquet(s"$dir/grams"),
-    rowsPerBand = storedRowsPerBand(spark, dir))
+  def read(spark: SparkSession, dir: String): Frames = {
+    val live = Commit.current(spark, dir)
+    Frames(
+      fps = spark.read.parquet(s"$live/fps"),
+      bands = spark.read.parquet(s"$live/bands"),
+      grams = spark.read.parquet(s"$live/grams"),
+      rowsPerBand = storedRowsPerBand(spark, live))
+  }
 }

@@ -34,8 +34,9 @@ import org.apache.spark.sql.functions._
   * shuffles — correct, and the signal that compaction is overdue.
   *
   * Durability: each delete batch is committed as a GENERATION directory
-  * (`gen=<k>/`) written under a `_`-prefixed staging name first and
-  * renamed into place — readers (Spark hides `_`/`.` paths) never see a
+  * (`gen=<k>/`) written under its own `_stage-<uuid>` name first and
+  * published into place ([[graft.core.Commit.publish]]) — readers
+  * (Spark hides `_`/`.` paths) never see a
   * partial generation, and no maintenance step ever overwrites the sole
   * copy of a live vector: [[pruneDanglingDeletes]] commits its pruned
   * generation BEFORE dropping the old ones, so a crash at any point
@@ -78,39 +79,41 @@ object DeletionVectors {
   private[ops] def hasDeletes(spark: SparkSession, deleteDir: String): Boolean =
     listDeleteFiles(spark, deleteDir).nonEmpty
 
-  /** Highest committed generation id under `deleteDir` (−1 if none). */
+  /** Highest generation id of any `gen=<k>` entry under `deleteDir`
+    * (−1 if none). */
   private def maxGen(spark: SparkSession, deleteDir: String): Int = {
     val p = new Path(deleteDir)
     val fs = fsOf(spark, deleteDir)
     if (!fs.exists(p)) return -1
     fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen="))
+      .filter(_.getPath.getName.startsWith("gen="))
       .map(_.getPath.getName.stripPrefix("gen=").toInt)
       .foldLeft(-1)(math.max)
   }
 
-  /** Stage-then-rename generation commit: `df` is written to a hidden
-    * staging dir (invisible to every reader), counted THERE (so the
-    * returned count derives from the bytes actually written, not a
-    * second scan of the source), and renamed to `gen=<k>` only if
-    * non-empty. Returns the committed row count (0 ⇒ nothing was
-    * committed and the staging dir is gone). The rename is the single
-    * visibility point — a crash before it leaves the delete table
-    * untouched. */
+  /** Stage-then-publish generation commit: `df` is written to this
+    * attempt's own hidden stage, counted THERE (so the returned count
+    * derives from the bytes actually written, not a second scan of the
+    * source), and published as `gen=<k>` only if non-empty. Returns the
+    * committed row count (0 ⇒ nothing was committed and the stage is
+    * gone). The publish is the single visibility point; one that finds
+    * `gen=<k>` taken by a concurrent writer retries at the next id
+    * (delete generations commute, so both land). */
   private def commitGeneration(spark: SparkSession, deleteDir: String,
       df: DataFrame): Long = {
     val fs = fsOf(spark, deleteDir)
-    val stage = new Path(deleteDir, "_stage")
-    if (fs.exists(stage)) fs.delete(stage, true)
+    val stage = graft.core.Commit.stage(deleteDir)
     df.write.mode("overwrite").parquet(stage.toString)
     // count from the staged bytes (zero-task writes leave no data file)
-    val staged = listDeleteFiles(spark, stage.toString)
-    val n = if (staged.isEmpty) 0L
+    val n = if (listDeleteFiles(spark, stage.toString).isEmpty) 0L
       else spark.read.parquet(stage.toString).count()
     if (n == 0L) { fs.delete(stage, true); return 0L }
-    val gen = new Path(deleteDir, s"gen=${maxGen(spark, deleteDir) + 1}")
-    if (!fs.rename(stage, gen))
-      throw new java.io.IOException(s"could not commit delete generation $gen")
+    var published = false
+    while (!published) {
+      val gen = new Path(deleteDir, s"gen=${maxGen(spark, deleteDir) + 1}")
+      try { graft.core.Commit.publish(spark, stage, gen); published = true }
+      catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => () }
+    }
     n
   }
 

@@ -136,9 +136,8 @@ object Erasure {
               .find(q => q.getName.startsWith("part-") && q.getName.endsWith(".parquet"))
               .getOrElse(throw new IllegalStateException(
                 s"rewrite of $f produced no part file under $tmpDir"))
-            fs.delete(path, false)
-            if (!fs.rename(part, path))
-              throw new IllegalStateException(s"rename $part -> $path failed")
+            // one atomic replace: a crash leaves the old file or the new one
+            graft.core.Commit.swap(spark, part, path)
             fs.delete(tmpDir, true)
             (1, 0, total - keptN, keptN)
           }

@@ -1,8 +1,11 @@
 package graft.ops
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.core.Commit
 
 /** Persisted IVF (inverted-file) ANN index — the similarity-search
   * sibling of [[DedupIndex]]: the write-once derivable columns of an
@@ -10,9 +13,12 @@ import org.apache.spark.sql.types._
   * batch probes precomputed state instead of re-assigning (or worse,
   * re-fitting) the corpus:
   *
-  *   dir/centroids  (cell, emb)                 the learned coarse quantizer
-  *   dir/members    (vec_id, cell, embedding, norm)  one row per vector
-  *   dir/meta       (k)                         quantizer arity
+  *   centroids  (cell, emb)                      the learned coarse quantizer
+  *   members    (vec_id, cell, embedding, norm)  one row per vector
+  *   meta       (k)                              quantizer arity
+  *   gens/<b>   members of streaming batch b     ([[applyAppendBatch]])
+  *
+  * The four are one generation of `dir` ([[graft.core.Commit]]).
   *
   * `members` is written range-partitioned and row-group-sorted by
   * `cell` ([[graft.sources.Sinks.writeSortedBy]]), and [[topk]] pushes
@@ -53,13 +59,16 @@ object IvfIndex {
     val centSchema = StructType(Seq(
       StructField("cell", IntegerType, nullable = false),
       StructField("emb", ArrayType(DoubleType, containsNull = false), nullable = false)))
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(centRows.toIndexedSeq, 1), centSchema)
-      .repartition(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/centroids")
-    writeMembers(emb, cents, dir, SaveMode.Overwrite)
-    import spark.implicits._
-    Seq(k).toDF("k")
-      .repartition(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/meta")
+    Commit.newGeneration(spark, dir) { gen =>
+      spark.createDataFrame(
+          spark.sparkContext.parallelize(centRows.toIndexedSeq, 1), centSchema)
+        .repartition(1).write.mode(SaveMode.Overwrite).parquet(s"$gen/centroids")
+      writeMembersInto(emb, cents, s"$gen/members", SaveMode.Overwrite)
+      import spark.implicits._
+      Seq(k).toDF("k")
+        .repartition(1).write.mode(SaveMode.Overwrite).parquet(s"$gen/meta")
+      fsOf(spark, gen).mkdirs(new Path(gen, "gens"))
+    }
   }
 
   /** Append new vectors, assigned with the STORED centroids. Existing
@@ -67,7 +76,8 @@ object IvfIndex {
     * per-file cell sort, so cell pruning holds within every
     * generation. */
   def append(emb: DataFrame, dir: String): Unit =
-    writeMembers(emb, readCentroids(emb.sparkSession, dir), dir, SaveMode.Append)
+    writeMembersInto(emb, readCentroids(emb.sparkSession, dir),
+      s"${Commit.current(emb.sparkSession, dir)}/members", SaveMode.Append)
 
   /** What [[refresh]] found and did: vectors indexed for the first
     * time, members untouched, members dropped (vanished from the
@@ -79,7 +89,7 @@ object IvfIndex {
     * against the stored member ids, assign ONLY never-seen vectors with
     * the STORED centroids ([[append]]'s no-refit contract), and, when
     * members VANISHED from the corpus, rewrite the member set without
-    * them through [[compact]]'s crash-safe swap (a removal cannot be an
+    * them through [[compact]]'s new generation (a removal cannot be an
     * append). Result: probe-identical to indexing the whole current
     * corpus under the same stored quantizer (IvfIndexSpec pins
     * assignment equality), at delta cost when the corpus only grows —
@@ -138,19 +148,14 @@ object IvfIndex {
   }
 
   /** One micro-batch of streaming index maintenance: assign with the
-    * stored centroids and (over)write generation directory
-    * `gens/<batchId>` — replaying a batch after a crash rewrites ITS
-    * OWN directory and no other, so the append is idempotent per
-    * batch id (the [[graft.streaming.Streams]] snapshot-merge
-    * contract, minus the pointer: generations are disjoint by
-    * construction, nothing needs a commit point). */
+    * stored centroids and (over)write batch directory
+    * `gens/<batchId>` of the live generation — replaying a batch after
+    * a crash rewrites ITS OWN directory and no other, so the append is
+    * idempotent per batch id (batch directories are disjoint by
+    * construction, so none needs a pointer). */
   def applyAppendBatch(batch: DataFrame, dir: String, batchId: Long): Unit =
     writeMembersInto(batch, readCentroids(batch.sparkSession, dir),
-      s"$dir/gens/$batchId", SaveMode.Overwrite)
-
-  private def writeMembers(emb: DataFrame, cents: Array[Array[Double]],
-      dir: String, mode: SaveMode): Unit =
-    writeMembersInto(emb, cents, s"$dir/members", mode)
+      s"${Commit.current(batch.sparkSession, dir)}/gens/$batchId", SaveMode.Overwrite)
 
   private def writeMembersInto(emb: DataFrame, cents: Array[Array[Double]],
       path: String, mode: SaveMode): Unit = {
@@ -166,119 +171,66 @@ object IvfIndex {
     finally cached.unpersist(false)
   }
 
-  /** Every member path of the index: the base `members` table plus any
-    * COMMITTED streaming generations under `gens/`. A generation counts
-    * only when its parquet job committed (`_SUCCESS` present) — a
-    * half-written generation from a crashed micro-batch is invisible to
+  /** Every member path of the index: the live generation's `members`
+    * table plus its COMMITTED streaming batches under `gens/`. A batch
+    * counts only when its parquet job committed (`_SUCCESS` present) —
+    * a half-written batch from a crashed micro-batch is invisible to
     * probes until its replay rewrites it; non-numeric stray directories
-    * are ignored rather than fatal. Each committed generation is a
-    * complete, cell-sorted parquet directory, so footer pruning holds
-    * per-path. When the base table is missing (crash inside
-    * [[compact]]'s swap) the staged `members_old` stands in for it —
-    * together with the gens/gens_old rule below, every crash window
-    * reads exactly one copy of every row. */
+    * are ignored rather than fatal. Each committed batch is a complete,
+    * cell-sorted parquet directory, so footer pruning holds per-path. */
   private[graft] def memberPaths(spark: SparkSession, dir: String): Seq[String] = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def committedGens(name: String): Seq[String] = {
-      val gensDir = new org.apache.hadoop.fs.Path(s"$dir/$name")
-      if (!fs.exists(gensDir)) Seq.empty
-      else
-        fs.listStatus(gensDir).toSeq.filter(_.isDirectory)
-          .map(_.getPath.getName)
-          .filter(_.forall(_.isDigit))
-          .filter(g => fs.exists(new org.apache.hadoop.fs.Path(gensDir, s"$g/_SUCCESS")))
-          .map(_.toLong).sorted
-          .map(g => s"$dir/$name/$g")
-    }
-    // compact stages members→gens away before the swap. Which copies to
-    // read follows from which base is live: a LIVE members next to a
-    // gens_old means the swap completed (the compacted base already
-    // CONTAINS the generations — reading gens_old too would double-
-    // count), so staged gens are only consulted when the base itself is
-    // the staged members_old (i.e. we crashed mid-swap).
-    val membersLive = fs.exists(new org.apache.hadoop.fs.Path(s"$dir/members"))
-    val gens =
-      if (membersLive) committedGens("gens")
-      else {
-        val live = committedGens("gens")
-        if (live.nonEmpty) live else committedGens("gens_old")
-      }
-    (if (membersLive) s"$dir/members" else s"$dir/members_old") +: gens
+    val live = Commit.current(spark, dir)
+    val gens = Option(fsOf(spark, live).globStatus(new Path(s"$live/gens/*/_SUCCESS")))
+      .toSeq.flatten.map(_.getPath.getParent.getName).filter(_.forall(_.isDigit))
+      .sortBy(_.toLong).map(g => s"$live/gens/$g")
+    s"$live/members" +: gens
   }
 
   private def readMembers(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(memberPaths(spark, dir): _*)
 
-  /** Compact append generations: rewrite `members` fully cell-sorted so
+  /** Compact streaming batches and appended files: rewrite `members`
+    * fully cell-sorted, with every batch under `gens/` folded in, so
     * footer pruning holds across the WHOLE index again (same offline
-    * maintenance contract as [[DedupIndex.compact]]; centroids and meta
-    * are generation-free).
-    *
-    * Crash-safe swap: the compacted table is fully written to a temp
-    * sibling first; the live `members`/`gens` are then STAGED AWAY
-    * (renamed to `members_old`/`gens_old`), the temp renamed in, and
-    * the staged copies deleted last. [[memberPaths]] prefers live over
-    * staged for each of the two kinds independently, so every crash
-    * window — before the stage, between the stages, before the swap,
-    * before the cleanup — still reads exactly one copy of every row.
-    * A second compact (or a probe) after a crash heals by the same
-    * preference rule; re-running compact completes the fold.
+    * maintenance contract as [[DedupIndex.compact]]), as a new
+    * generation beside copies of the centroids and meta: every crash
+    * window reads each member exactly once.
     *
     * Single-writer contract: compaction must not run concurrently with
-    * [[applyAppendBatch]] — a new generation landing between the gens
-    * stage and the swap would be invisible to the staged-fallback rule.
-    * Pause the maintenance stream (or fence on batch ids) around
-    * compaction, exactly as with [[DedupIndex.compact]]. */
+    * [[applyAppendBatch]] or [[append]] — a batch landing in the
+    * generation being replaced is lost with it. Pause the maintenance
+    * stream (or fence on batch ids) around compaction, exactly as with
+    * [[DedupIndex.compact]]. */
   def compact(spark: SparkSession, dir: String): Unit =
     compactWith(spark, dir, identity)
 
   /** [[compact]] with a member filter applied inside the rewrite — the
-    * removal path of [[refresh]] rides the same crash-safe swap. */
+    * removal path of [[refresh]] rides the same commit. */
   private def compactWith(spark: SparkSession, dir: String,
       keep: DataFrame => DataFrame): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    // Finish a previously crashed swap before starting a new one. The
-    // staged GENERATIONS are restored FIRST: a missing base means the
-    // swap-in never happened, so gens_old is live data, not a stale
-    // duplicate — deleting it here would lose every staged generation.
-    // Restoring gens before members keeps every heal window readable by
-    // [[memberPaths]] (members_old + live gens is the W2 shape).
-    if (!fs.exists(p(s"$dir/members")) && fs.exists(p(s"$dir/members_old"))) {
-      if (!fs.exists(p(s"$dir/gens")) && fs.exists(p(s"$dir/gens_old")))
-        require(fs.rename(p(s"$dir/gens_old"), p(s"$dir/gens")),
-          s"could not heal staged generations at $dir")
-      require(fs.rename(p(s"$dir/members_old"), p(s"$dir/members")),
-        s"could not heal staged members at $dir")
+    val live = Commit.current(spark, dir)
+    val members = keep(readMembers(spark, dir))
+    Commit.newGeneration(spark, dir) { gen =>
+      graft.sources.Sinks.writeSortedBy(members, s"$gen/members", Seq("cell"))
+      val fs = fsOf(spark, gen)
+      Seq("centroids", "meta").foreach { t =>
+        org.apache.hadoop.fs.FileUtil.copy(fs, new Path(s"$live/$t"),
+          fs, new Path(s"$gen/$t"), false, spark.sparkContext.hadoopConfiguration)
+      }
+      fs.mkdirs(new Path(gen, "gens"))
     }
-    // with a live base, any remaining staged copies ARE stale duplicates
-    fs.delete(p(s"$dir/members_old"), true)
-    fs.delete(p(s"$dir/gens_old"), true)
-
-    val tmp = s"$dir/.compact_members"
-    fs.delete(p(tmp), true)
-    graft.sources.Sinks.writeSortedBy(
-      keep(readMembers(spark, dir)), tmp, Seq("cell"))
-    require(fs.rename(p(s"$dir/members"), p(s"$dir/members_old")),
-      s"could not stage members at $dir")
-    if (fs.exists(p(s"$dir/gens")))
-      require(fs.rename(p(s"$dir/gens"), p(s"$dir/gens_old")),
-        s"could not stage generations at $dir")
-    require(fs.rename(p(tmp), p(s"$dir/members")),
-      s"compaction swap failed at $dir — staged copies left for healing")
-    fs.delete(p(s"$dir/members_old"), true)
-    fs.delete(p(s"$dir/gens_old"), true)
   }
+
+  private def fsOf(spark: SparkSession, dir: String) =
+    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** The stored coarse quantizer, ordered by cell id. */
   def readCentroids(spark: SparkSession, dir: String): Array[Array[Double]] =
-    spark.read.parquet(s"$dir/centroids").orderBy(col("cell")).collect()
+    spark.read.parquet(s"${Commit.current(spark, dir)}/centroids").orderBy(col("cell")).collect()
       .map(_.getSeq[Double](1).toArray)
 
   def storedK(spark: SparkSession, dir: String): Int =
-    spark.read.parquet(s"$dir/meta").head.getInt(0)
+    spark.read.parquet(s"${Commit.current(spark, dir)}/meta").head.getInt(0)
 
   /** Exact-cosine top-k over the index for a (query_id, embedding)
     * frame: map-side probe-cell assignment against the stored centroid

@@ -14,7 +14,9 @@ import org.apache.spark.sql.functions._
   *     the handful of files/row groups holding those postings — the
   *     sorted-layout discipline Sinks.writeSortedBy pins;
   *   terms/    — (term, df), same sorted layout;
-  *   stats/    — 1 row (n, avgdl).
+  *   stats/    — 1 row (n, avgdl, sum_dl).
+  * terms/ and stats/ are one generation of `dir` ([[graft.core.Commit]]);
+  * append-only postings/ stays at the top of `dir`.
   * Document length is DENORMALIZED into the postings row (classic
   * search-index design): scoring never joins a doc-grain table, so a
   * query's work is bounded by posting-list length alone.
@@ -33,14 +35,16 @@ object SearchIndex {
       .groupBy(col("term"), col("doc_id"), col("dl"))
       .agg(count(lit(1)).cast("double").as("tf"))
     graft.sources.Sinks.writeSortedBy(postings, s"$dir/postings", Seq("term"))
-    graft.sources.Sinks.writeSortedBy(
-      postings.groupBy(col("term")).agg(count(lit(1)).cast("double").as("df")),
-      s"$dir/terms", Seq("term"))
-    // sum_dl rides along for SearchIndexRefresh: dl is integer-valued,
-    // so the sum is exact in double and additive across append batches
-    base.agg(count(lit(1)).cast("double").as("n"), avg(col("dl")).as("avgdl"),
-        sum(col("dl")).as("sum_dl"))
-      .write.mode("overwrite").parquet(s"$dir/stats")
+    graft.core.Commit.newGeneration(docs.sparkSession, dir) { gen =>
+      graft.sources.Sinks.writeSortedBy(
+        postings.groupBy(col("term")).agg(count(lit(1)).cast("double").as("df")),
+        s"$gen/terms", Seq("term"))
+      // sum_dl rides along for SearchIndexRefresh: dl is integer-valued,
+      // so the sum is exact in double and additive across append batches
+      base.agg(count(lit(1)).cast("double").as("n"), avg(col("dl")).as("avgdl"),
+          sum(col("dl")).as("sum_dl"))
+        .write.mode("overwrite").parquet(s"$gen/stats")
+    }
   }
 
   /** One micro-batch of the STREAMING index maintenance path
@@ -85,10 +89,11 @@ object SearchIndex {
     val postings = spark.read.parquet(s"$dir/postings")
       .filter(col("term").isin(terms: _*))
       .select("term", "doc_id", "dl", "tf")
-    val df = spark.read.parquet(s"$dir/terms")
+    val live = graft.core.Commit.current(spark, dir)
+    val df = spark.read.parquet(s"$live/terms")
       .filter(col("term").isin(terms: _*))
       .groupBy(col("term")).agg(sum(col("df")).as("df"))
-    val statRows = spark.read.parquet(s"$dir/stats")
+    val statRows = spark.read.parquet(s"$live/stats")
     // legacy single-row stats may predate sum_dl; reconstruct the exact
     // integer-valued sum from n·avgdl (half-even round restores it)
     val withSum =

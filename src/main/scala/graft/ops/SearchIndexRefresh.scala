@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,12 +21,11 @@ import org.apache.spark.sql.functions._
   *     refreshed index scores BIT-IDENTICALLY to a from-scratch
   *     rebuild (SearchIndexRefreshSpec pins equality, not closeness).
   *
-  * terms/ and stats/ are rewritten via stage-then-swap (write to a
-  * `.tmp` sibling, delete, rename); the crash window between delete
-  * and rename is the simplification here — the production spelling is
-  * the snapshot store's versioned-dir + `_CURRENT` pointer discipline
-  * (streaming/Streams.scala), which this layout can adopt without
-  * changing the search path.
+  * terms/ and stats/ commit as one generation ([[graft.core.Commit]]),
+  * so a reader's df and n come from the same refresh. The postings
+  * append lands before that commit and is not part of it: a crash
+  * between the two leaves postings df and n do not count, and a retry
+  * appends them again.
   *
   * Contract: `newDocs` doc_ids must be NEW (the dedup admission index
   * is the upstream gate); re-ingesting an existing doc_id would
@@ -39,6 +37,7 @@ object SearchIndexRefresh {
 
   def refresh(newDocs: DataFrame, dir: String): RefreshReport = {
     val spark = newDocs.sparkSession
+    val live = graft.core.Commit.current(spark, dir)
     val base = newDocs.select(col("doc_id"), col("text"),
       size(split(col("text"), " ")).cast("double").as("dl"))
     val postings = base
@@ -46,58 +45,43 @@ object SearchIndexRefresh {
       .groupBy(col("term"), col("doc_id"), col("dl"))
       .agg(count(lit(1)).cast("double").as("tf"))
       .persist()
-    val nPostings = postings.count() // materialize before the appends read it twice
+    try {
+      val nPostings = postings.count() // materialize before the appends read it twice
 
-    // postings: append the batch's own rows as new term-sorted files
-    graft.sources.Sinks.writeSortedBy(postings, s"$dir/postings", Seq("term"),
-      mode = org.apache.spark.sql.SaveMode.Append)
+      // postings: append the batch's own rows as new term-sorted files
+      graft.sources.Sinks.writeSortedBy(postings, s"$dir/postings", Seq("term"),
+        mode = org.apache.spark.sql.SaveMode.Append)
 
-    // terms: additive df merge at vocabulary grain
-    val batchTerms = postings.groupBy(col("term"))
-      .agg(count(lit(1)).cast("double").as("df"))
-    val mergedTerms = spark.read.parquet(s"$dir/terms")
-      .unionByName(batchTerms)
-      .groupBy(col("term")).agg(sum(col("df")).as("df"))
-    swapIn(spark, s"$dir/terms") { tmp =>
-      graft.sources.Sinks.writeSortedBy(mergedTerms, tmp, Seq("term"))
-    }
+      // terms: additive df merge at vocabulary grain
+      val batchTerms = postings.groupBy(col("term"))
+        .agg(count(lit(1)).cast("double").as("df"))
+      val mergedTerms = spark.read.parquet(s"$live/terms")
+        .unionByName(batchTerms)
+        .groupBy(col("term")).agg(sum(col("df")).as("df"))
 
-    // stats: additive n and Σdl; Σdl is recovered exactly — from the
-    // stored sum when present, else from n·avgdl (legacy 2-column
-    // stats, where avgdl = Σdl/n was computed from integer-valued dl,
-    // so the product reconstructs the integer sum exactly after a
-    // half-even round)
-    val old = spark.read.parquet(s"$dir/stats").collect()(0)
-    val oldN = old.getDouble(old.fieldIndex("n"))
-    val oldSum =
-      if (old.schema.fieldNames.contains("sum_dl"))
-        old.getDouble(old.fieldIndex("sum_dl"))
-      else math.rint(oldN * old.getDouble(old.fieldIndex("avgdl")))
-    val b = base.agg(count(lit(1)).cast("double").as("bn"),
-      sum(col("dl")).as("bsum")).collect()(0)
-    val (bn, bsum) = (b.getDouble(0), b.getDouble(1))
-    val n = oldN + bn
-    val sumDl = oldSum + bsum
-    swapIn(spark, s"$dir/stats") { tmp =>
-      spark.range(1).select(
-          lit(n).as("n"), lit(sumDl / n).as("avgdl"), lit(sumDl).as("sum_dl"))
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-    }
-    postings.unpersist()
-    RefreshReport(bn.toLong, nPostings)
-  }
-
-  /** Write the replacement layout to `<target>.tmp`, then swap it over
-    * `target` (delete + rename). */
-  private def swapIn(spark: SparkSession, target: String)(
-      write: String => Unit): Unit = {
-    val t = new Path(target)
-    val fs = t.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(t.getParent, s".${t.getName}_tmp")
-    fs.delete(tmp, true)
-    write(tmp.toString)
-    fs.delete(t, true)
-    if (!fs.rename(tmp, t))
-      throw new IllegalStateException(s"swap $tmp -> $t failed")
+      // stats: additive n and Σdl; Σdl is recovered exactly — from the
+      // stored sum when present, else from n·avgdl (legacy 2-column
+      // stats, where avgdl = Σdl/n was computed from integer-valued dl,
+      // so the product reconstructs the integer sum exactly after a
+      // half-even round)
+      val old = spark.read.parquet(s"$live/stats").collect()(0)
+      val oldN = old.getDouble(old.fieldIndex("n"))
+      val oldSum =
+        if (old.schema.fieldNames.contains("sum_dl"))
+          old.getDouble(old.fieldIndex("sum_dl"))
+        else math.rint(oldN * old.getDouble(old.fieldIndex("avgdl")))
+      val b = base.agg(count(lit(1)).cast("double").as("bn"),
+        sum(col("dl")).as("bsum")).collect()(0)
+      val (bn, bsum) = (b.getDouble(0), b.getDouble(1))
+      val n = oldN + bn
+      val sumDl = oldSum + bsum
+      graft.core.Commit.newGeneration(spark, dir) { gen =>
+        graft.sources.Sinks.writeSortedBy(mergedTerms, s"$gen/terms", Seq("term"))
+        spark.range(1).select(
+            lit(n).as("n"), lit(sumDl / n).as("avgdl"), lit(sumDl).as("sum_dl"))
+          .coalesce(1).write.mode("overwrite").parquet(s"$gen/stats")
+      }
+      RefreshReport(bn.toLong, nPostings)
+    } finally postings.unpersist()
   }
 }

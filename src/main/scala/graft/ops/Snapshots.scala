@@ -44,10 +44,10 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *    commit, and a MERGE that writes the tombstone and the new row in
   *    the same commit upserts correctly.
   *
-  * Commit mechanics reuse the engine's crash-safe generation
-  * discipline (the [[DeletionVectors]] pattern): the new manifest is
-  * written under a `_`-prefixed staging name and RENAMED to
-  * `snap=<k>` — readers either see the whole snapshot or none of it,
+  * Commit mechanics are the engine's one crash-safe commit
+  * ([[graft.core.Commit]]): the new manifest is written under a
+  * `_`-prefixed staging name and PUBLISHED as `snap=<k>` — readers
+  * either see the whole snapshot or none of it,
   * and the previous snapshot is never touched. Driver-side state is
   * the manifest itself — metadata-sized (one row per file or delete
   * generation), the same bound as [[Manifest]]/[[Compaction]] and
@@ -161,40 +161,31 @@ object Snapshots {
     manifestAt(spark, root, snap).filter(col("kind") === KindData)
       .select(col("file")).collect().map(_.getString(0)).toSeq.sorted
 
-  /** Stage-then-rename commit of a manifest frame as snapshot `next`.
-    * The rename is also the OPTIMISTIC-CONCURRENCY point: two writers
-    * racing to commit the same snapshot id both stage, but rename onto
-    * an existing directory fails — the loser gets a loud exception and
-    * must re-derive its commit against the winner's snapshot (the
-    * Iceberg commit-retry contract; [[commitFromFs]] carries the retry
-    * loop for pure appends). Each attempt stages under its OWN
-    * `_stage-<next>-<uniq>` path: a shared staging dir would let
-    * racing writers delete/overwrite each other's staged manifest
-    * before the rename — a silent manifest swap instead of the loud
-    * loss this method promises. Stale stage dirs from crashed attempts
-    * are `_`-prefixed (invisible to every listing) and swept here on
-    * the next successful commit. */
+  /** Stage-then-publish commit of a manifest frame as snapshot `next`.
+    * The publish ([[graft.core.Commit.publish]]) is also the
+    * OPTIMISTIC-CONCURRENCY point: two writers racing to commit the
+    * same snapshot id both stage, but publishing onto an existing
+    * directory throws — the loser gets a loud exception and must
+    * re-derive its commit against the winner's snapshot (the Iceberg
+    * commit-retry contract; [[commitFromFs]] carries the retry loop for
+    * pure appends). Each attempt stages under its OWN `_stage-<uuid>`
+    * path, so racing writers never touch each other's staged manifest.
+    * Stale stage dirs from crashed attempts are `_`-prefixed (invisible
+    * to every listing) and swept by the next successful publish. */
   private[ops] def commitManifest(spark: SparkSession, root: String,
       manifest: DataFrame, next: Long): Long = {
     val fs = fsOf(spark, root)
-    val stage = new Path(root,
-      s"_stage-$next-${java.util.UUID.randomUUID().toString.take(8)}")
+    val stage = graft.core.Commit.stage(root)
     manifest.coalesce(1).write.mode("overwrite").parquet(stage.toString)
     val dst = new Path(snapDir(root, next))
-    val committed = !fs.exists(dst) && fs.rename(stage, dst)
-    if (!committed) {
-      fs.delete(stage, true) // our own attempt's dir — never shared
-      throw new java.io.IOException(
-        s"could not commit snapshot $dst (concurrent commit won? " +
-          "re-derive against the latest snapshot and retry)")
+    try graft.core.Commit.publish(spark, stage, dst)
+    catch {
+      case e: org.apache.hadoop.fs.FileAlreadyExistsException =>
+        fs.delete(stage, true) // our own attempt's dir — never shared
+        throw new java.io.IOException(
+          s"could not commit snapshot $dst (concurrent commit won? " +
+            "re-derive against the latest snapshot and retry)", e)
     }
-    // sweep stage dirs orphaned by CRASHED attempts (ours just renamed
-    // away; a concurrent in-flight attempt is younger than the window)
-    val cutoff = System.currentTimeMillis() - 60L * 60 * 1000
-    fs.listStatus(new Path(root)).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("_stage-") &&
-        s.getModificationTime < cutoff)
-      .foreach(s => fs.delete(s.getPath, true))
     next
   }
 
@@ -1218,9 +1209,7 @@ object Snapshots {
     toPublish.foreach { k =>
       val src = new Path(snapDir(broot, k))
       val dst = new Path(snapDir(root, k))
-      val ok = !fs.exists(dst) && fs.rename(src, dst)
-      require(ok, s"could not publish snapshot $k of branch '$name' " +
-        s"(concurrent commit at $dst?)")
+      graft.core.Commit.publish(spark, src, dst) // a concurrent commit at dst throws
     }
     fs.delete(new Path(broot), true)
     toPublish

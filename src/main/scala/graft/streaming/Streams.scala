@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.core.Commit
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -755,21 +756,20 @@ object Streams {
     * parquet):
     *
     *  - each batch writes a NEW versioned directory `v<batchId>`, then
-    *    repoints the `_CURRENT` pointer file via write-temp + atomic
-    *    replace (FileContext rename-with-OVERWRITE where the FS
-    *    supports it);
+    *    repoints the `_CURRENT` pointer ([[Commit.pointTo]]: write a
+    *    staged file, then replace the pointer atomically);
     *  - a reader either sees the old snapshot or the new one, never a
     *    half-written mix, and old versions stay readable (time travel /
     *    caller-driven retention);
     *  - replays are idempotent BOTH ways round the pointer commit: a
-    *    batch replayed after a crash *before* commitPointer rewrites
+    *    batch replayed after a crash *before* the pointer moves rewrites
     *    `v<batchId>` from the previous version; one replayed *after*
-    *    commitPointer (pointer committed, checkpoint not) finds
+    *    it (pointer committed, checkpoint not) finds
     *    `_CURRENT` already at its own version and only re-asserts the
     *    pointer — it must NOT re-merge, since that would read `v<N>`
     *    while overwriting `v<N>`;
     *  - a pointer lost mid-swap (exotic FS without atomic replace)
-    *    heals: [[currentVersion]] falls back to the highest version
+    *    heals: [[Commit.currentGeneration]] falls back to the highest version
     *    directory that carries a `_SUCCESS` marker.
     *
     * At scale each merge shuffles O(snapshot keys ∪ batch keys) — the
@@ -959,66 +959,27 @@ object Streams {
   def applySnapshotBatch(
       spark: SparkSession, snapshotDir: String, batch: DataFrame,
       batchId: Long, keys: Seq[String], orderBy: Seq[String]): Unit = {
-    val version = s"v$batchId"
-    val cur = currentVersion(spark, snapshotDir)
-    if (cur.contains(version)) {
-      // crash landed between commitPointer and the streaming
-      // checkpoint's own commit: the batch output is already live.
-      // Re-merging would read v<N> while overwriting v<N> (Spark
-      // rejects the self-overwrite and the stream would wedge on every
-      // restart) — re-assert the pointer and move on
-      commitPointer(spark, snapshotDir, version)
-    } else {
-      val merged = cur.map(v => spark.read.parquet(s"$snapshotDir/$v")) match {
+    val cur = Commit.currentGeneration(spark, snapshotDir)
+    if (!cur.contains(batchId)) {
+      val merged = cur.map(v => spark.read.parquet(s"$snapshotDir/v$v")) match {
         case Some(snap) => graft.ops.Upsert.mergeLatest(snap, batch, keys, orderBy)
         case None => graft.ops.Upsert.latestPerKey(batch, keys, orderBy)
       }
-      merged.write.mode("overwrite").parquet(s"$snapshotDir/$version")
-      commitPointer(spark, snapshotDir, version)
+      merged.write.mode("overwrite").parquet(s"$snapshotDir/v$batchId")
     }
+    // when the batch is already current, the crash landed between the
+    // pointer and the streaming checkpoint's own commit: re-merging
+    // would read v<N> while overwriting v<N> (Spark rejects the
+    // self-overwrite and the stream would wedge on every restart), so
+    // only the pointer is re-asserted
+    Commit.pointTo(spark, snapshotDir, batchId)
   }
 
-  /** Current snapshot version: the `_CURRENT` pointer, or — when the
-    * pointer is missing (crash inside a non-atomic swap, or manual
-    * damage) — the highest `v<N>` directory whose parquet write
-    * completed (`_SUCCESS` present). None before the first commit. */
-  private[streaming] def currentVersion(
-      spark: SparkSession, snapshotDir: String): Option[String] = {
-    val fs = hadoopFs(spark, snapshotDir)
-    val ptr = new org.apache.hadoop.fs.Path(snapshotDir, "_CURRENT")
-    if (fs.exists(ptr)) {
-      val in = fs.open(ptr)
-      val v = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-      Some(v)
-    } else {
-      val complete = completeVersions(fs, snapshotDir)
-      if (complete.isEmpty) None else Some(s"v${complete.max}")
-    }
-  }
-
-  /** The single definition of a COMPLETE snapshot version: a `v<N>`
-    * directory whose parquet write finished (`_SUCCESS` present).
-    * Shared by the pointer fallback, time travel, and the version
-    * listing so the three can never disagree about what exists. */
-  private def completeVersions(
-      fs: org.apache.hadoop.fs.FileSystem, snapshotDir: String): Seq[Long] = {
-    val dir = new org.apache.hadoop.fs.Path(snapshotDir)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .filter(_.matches("v\\d+"))
-      .filter(n => fs.exists(new org.apache.hadoop.fs.Path(dir, s"$n/_SUCCESS")))
-      .map(_.drop(1).toLong)
-      .sorted
-  }
-
-  /** Current snapshot per [[currentVersion]]; None before the first
-    * commit. */
+  /** Current snapshot per [[Commit.currentGeneration]]; None before
+    * the first commit. */
   def readSnapshot(spark: SparkSession, snapshotDir: String): Option[DataFrame] =
-    currentVersion(spark, snapshotDir)
-      .map(version => spark.read.parquet(s"$snapshotDir/$version"))
+    Commit.currentGeneration(spark, snapshotDir)
+      .map(version => spark.read.parquet(s"$snapshotDir/v$version"))
 
   /** TIME TRAVEL: read the snapshot as of a specific version (audit,
     * incident forensics, training-data reproduction). Only COMPLETE
@@ -1028,82 +989,31 @@ object Streams {
     * exist (an uncommitted merge is not history either). None when the
     * version was never written or has been vacuumed. */
   def readSnapshotAt(
-      spark: SparkSession, snapshotDir: String, version: Long): Option[DataFrame] = {
-    val fs = hadoopFs(spark, snapshotDir)
-    val cur = currentVersion(spark, snapshotDir).map(_.drop(1).toLong)
-    if (completeVersions(fs, snapshotDir).contains(version) && cur.exists(version <= _))
+      spark: SparkSession, snapshotDir: String, version: Long): Option[DataFrame] =
+    if (snapshotVersions(spark, snapshotDir).contains(version))
       Some(spark.read.parquet(s"$snapshotDir/v$version"))
     else None
-  }
 
   /** The readable history: complete versions at or below the current
     * pointer, ascending — what time travel can actually serve after
     * crashes and vacuums. */
-  def snapshotVersions(spark: SparkSession, snapshotDir: String): Seq[Long] = {
-    val fs = hadoopFs(spark, snapshotDir)
-    currentVersion(spark, snapshotDir).map(_.drop(1).toLong) match {
+  def snapshotVersions(spark: SparkSession, snapshotDir: String): Seq[Long] =
+    Commit.currentGeneration(spark, snapshotDir) match {
       case None => Seq.empty
-      case Some(cur) => completeVersions(fs, snapshotDir).filter(_ <= cur)
+      case Some(cur) => Commit.generations(spark, snapshotDir).filter(_ <= cur)
     }
-  }
 
   /** Retention for the versioned snapshot store: delete all but the
     * `keep` highest version directories — the VACUUM the
     * [[snapshotMergeStream]] layout needs once time travel has served
     * its audit window (every batch adds a full version; without
-    * retention the store grows linearly in batches, not in data).
-    * Safety rails: the CURRENT version (pointer target, or the
-    * highest-complete fallback) is never deleted even if `keep` would
-    * exclude it, `keep` ≥ 1 is enforced, and only `v<N>` directories
-    * are touched (the pointer files and any foreign dirs are not the
-    * vacuum's to delete). Returns the deleted version names. */
+    * retention the store grows linearly in batches, not in data). The
+    * CURRENT version is never deleted even if `keep` would exclude it,
+    * and `keep` ≥ 1 is enforced ([[Commit.vacuum]]). Returns the
+    * deleted version names. */
   def vacuumSnapshots(
-      spark: SparkSession, snapshotDir: String, keep: Int): Seq[String] = {
-    require(keep >= 1, s"keep must be >= 1, got $keep")
-    val fs = hadoopFs(spark, snapshotDir)
-    val dir = new org.apache.hadoop.fs.Path(snapshotDir)
-    if (!fs.exists(dir)) return Seq.empty
-    val versions = fs.listStatus(dir).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .filter(_.matches("v\\d+"))
-      .sortBy(_.drop(1).toLong)
-    val current = currentVersion(spark, snapshotDir)
-    val doomed = versions.dropRight(keep).filterNot(current.contains)
-    doomed.foreach { v =>
-      fs.delete(new org.apache.hadoop.fs.Path(dir, v), true)
-    }
-    doomed
-  }
-
-  /** Point `_CURRENT` at `version`: write `_CURRENT.tmp`, close, then
-    * atomically replace the pointer (FileContext rename with OVERWRITE
-    * — atomic on HDFS and local FS). On file systems without rename
-    * semantics the delete+rename fallback leaves a pointer-less window;
-    * [[currentVersion]]'s highest-complete-version fallback covers a
-    * crash inside it. */
-  private def commitPointer(spark: SparkSession, snapshotDir: String, version: String): Unit = {
-    val fs = hadoopFs(spark, snapshotDir)
-    val tmp = new org.apache.hadoop.fs.Path(snapshotDir, "_CURRENT.tmp")
-    val ptr = new org.apache.hadoop.fs.Path(snapshotDir, "_CURRENT")
-    val out = fs.create(tmp, true)
-    try out.write(version.getBytes("UTF-8")) finally out.close()
-    try {
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        ptr.toUri, spark.sparkContext.hadoopConfiguration)
-      fc.rename(fs.makeQualified(tmp), fs.makeQualified(ptr),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    } catch {
-      case _: UnsupportedOperationException | _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-        if (fs.exists(ptr)) fs.delete(ptr, false)
-        if (!fs.rename(tmp, ptr))
-          throw new java.io.IOException(s"pointer swap failed for $snapshotDir -> $version")
-    }
-  }
-
-  private def hadoopFs(spark: SparkSession, dir: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      spark: SparkSession, snapshotDir: String, keep: Int): Seq[String] =
+    Commit.vacuum(spark, snapshotDir, keep)
 
   /** Drain-available-and-stop runner (batch-first engine; streaming is
     * incremental ingestion, not an always-on service). */

@@ -185,6 +185,26 @@ class PipelineCliSpec extends SparkSpec {
     assert(spark.read.parquet(s"$work/out1/docs").count() == 1)
   }
 
+  test("dedup-index + dedup-compact + dedup-admit: the CLI reads the index through its generation") {
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft_dc").toString
+    Seq((1L, "a b c d e f g h i j k l m"), (2L, "n o p q r s t u v w x y z"))
+      .toDF("doc_id", "text").write.mode("overwrite").parquet(s"$work/corpus")
+    Seq((10L, "a b c d e f g h i j k l m"),      // exact corpus dup
+        (11L, "p q r s t u v w x y z a1 b1"))    // novel
+      .toDF("doc_id", "text").write.mode("overwrite").parquet(s"$work/batch")
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out)(Pipeline.run(spark, List("dedup-index", s"$work/corpus", s"$work/idx")))
+    assert(out.toString.contains("indexed 2 corpus docs (2 fingerprints)"), out.toString)
+    Pipeline.run(spark, List("dedup-compact", s"$work/idx"))
+    Pipeline.run(spark, List("dedup-admit", s"$work/idx", s"$work/batch", s"$work/out"))
+    val statuses = spark.read.parquet(s"$work/out/status")
+      .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("status")).toMap
+    assert(statuses == Map(10L -> "corpus_exact", 11L -> "admitted"))
+    assert(graft.ops.DedupIndex.read(spark, s"$work/idx").fps
+      .select("doc_id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 11L))
+  }
+
   test("ivf-index + ivf-append + ivf-topk: stored ANN index round trip") {
     import spark.implicits._
     val work = Files.createTempDirectory("graft_ivfcli").toString

@@ -131,25 +131,6 @@ class RunnerSpec extends SparkSpec {
     Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
       .filter(t => t.getName.startsWith("graft-eval-lane-") && t.isAlive)
 
-  /** Spark jobs `body` starts, as the properties each job carried. */
-  private def jobsOf[A](body: => A): (A, Seq[java.util.Properties]) = {
-    val sc = spark.sparkContext
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).getOrElse(new java.util.Properties))
-    }
-    org.apache.spark.graft.ListenerBridge.waitUntilEmpty(sc)
-    sc.addSparkListener(listener)
-    val out = try {
-      val a = body
-      org.apache.spark.graft.ListenerBridge.waitUntilEmpty(sc)
-      a
-    } finally sc.removeSparkListener(listener)
-    import scala.jdk.CollectionConverters._
-    (out, seen.asScala.toSeq)
-  }
-
   test("concurrent lanes equal a serial evaluateModel of each model, metric for metric") {
     val runDir = Files.createTempDirectory("graft_run_par").toString
     val ranked = Runner.runMultiModel(trainTable, threeModels(), runDir)

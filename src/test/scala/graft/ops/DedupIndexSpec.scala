@@ -199,21 +199,23 @@ class DedupIndexSpec extends SparkSpec {
     val indexDir = java.nio.file.Files.createTempDirectory("graft_didx_jobs").toString
     DedupIndex.write(corpusDocs, indexDir)
     val idx = DedupIndex.read(spark, indexDir)
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.graft.ListenerBridge.waitUntilEmpty(sc)
-    sc.addSparkListener(listener)
-    val out = try {
-      val rows = collectStatuses(DedupDocs.incrementalIndexed(idx, batchDocs))
-      org.apache.spark.graft.ListenerBridge.waitUntilEmpty(sc)
-      rows
-    } finally sc.removeSparkListener(listener)
+    val (out, jobs) = jobsOf(collectStatuses(DedupDocs.incrementalIndexed(idx, batchDocs)))
     assert(out.size == 5)
-    assert(jobs.get <= 15, s"bounded admission ran ${jobs.get} Spark jobs")
+    assert(jobs.size <= 15, s"bounded admission ran ${jobs.size} Spark jobs")
+  }
+
+  test("the index commit adds no Spark job: write, read and append stay at their budgets") {
+    // budgets are the counts on this fixture before the tables moved
+    // into generations: the commit is driver-side metadata only
+    val indexDir = java.nio.file.Files.createTempDirectory("graft_didx_budget").toString
+    val (_, writeJobs) = jobsOf(DedupIndex.write(corpusDocs, indexDir))
+    val (_, readJobs) = jobsOf(DedupIndex.read(spark, indexDir))
+    val (_, appendJobs) = jobsOf(
+      DedupIndex.append(Seq((12L, third)).toDF("doc_id", "text"), indexDir))
+    info(s"jobs: write ${writeJobs.size}, read ${readJobs.size}, append ${appendJobs.size}")
+    assert(writeJobs.size <= 15, s"DedupIndex.write ran ${writeJobs.size} Spark jobs")
+    assert(readJobs.size <= 5, s"DedupIndex.read ran ${readJobs.size} Spark jobs")
+    assert(appendJobs.size <= 15, s"DedupIndex.append ran ${appendJobs.size} Spark jobs")
   }
 
   test("banding parameter is index state: a non-default write still band-matches probes") {
@@ -240,7 +242,8 @@ class DedupIndexSpec extends SparkSpec {
         Seq((20L, third), (22L, base + " extra")).toDF("doc_id", "text")))
     val before = admitted
     def dataFiles(t: String): Long =
-      java.nio.file.Files.list(java.nio.file.Paths.get(s"$indexDir/$t"))
+      java.nio.file.Files.list(
+          java.nio.file.Paths.get(s"${graft.core.Commit.current(spark, indexDir)}/$t"))
         .filter(p => p.toString.endsWith(".parquet")).count()
     val filesBefore = dataFiles("fps")
     DedupIndex.compact(spark, indexDir)
@@ -277,7 +280,7 @@ class DedupIndexSpec extends SparkSpec {
       (21L, "corpus_near", -1L),
       (22L, "admitted", 22L)))
     // null-text docs index nothing: doc 14 contributed no fp/band/gram rows
-    assert(spark.read.parquet(s"$indexDir/fps")
+    assert(DedupIndex.read(spark, indexDir).fps
       .filter($"doc_id" === 14L).count() == 0)
   }
 }

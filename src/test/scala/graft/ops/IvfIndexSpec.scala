@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Persisted IVF index: the stored spelling must (1) reproduce the
@@ -8,7 +7,7 @@ import org.apache.spark.sql.functions._
   * with the STORED centroids (cell space is index state), and (3) push
   * the probed cell set into the members scan so unprobed cells' row
   * groups are never decoded. */
-class IvfIndexSpec extends SparkSpec {
+class IvfIndexSpec extends graft.core.CrashChecks {
   import spark.implicits._
 
   private val sf = "/root/testdata/sf0.001"
@@ -45,7 +44,8 @@ class IvfIndexSpec extends SparkSpec {
 
     // compaction merges the write+append generations and changes nothing
     def files: Long = {
-      val ls = java.nio.file.Files.list(java.nio.file.Paths.get(s"$dir/members"))
+      val ls = java.nio.file.Files.list(
+        java.nio.file.Paths.get(s"${graft.core.Commit.current(spark, dir)}/members"))
       try ls.filter(_.toString.endsWith(".parquet")).count() finally ls.close()
     }
     val before = files
@@ -72,7 +72,7 @@ class IvfIndexSpec extends SparkSpec {
     // exactly the stored-centroid argmin recomputed from scratch
     val cents = IvfIndex.readCentroids(spark, dir)
     val want = emb.select($"vec_id", KMeansVec.cellExpr("embedding", cents).as("cell"))
-    val got = spark.read.parquet(s"$dir/members").select($"vec_id", $"cell")
+    val got = spark.read.parquet(IvfIndex.memberPaths(spark, dir): _*).select($"vec_id", $"cell")
     assert(got.count() == nAll)
     assert(got.except(want).count() == 0 && want.except(got).count() == 0)
     // idempotence: a second refresh over the same corpus is a no-op
@@ -83,7 +83,7 @@ class IvfIndexSpec extends SparkSpec {
     val shrunk = emb.filter($"vec_id" % 7 =!= 0)
     val d3 = IvfIndex.refresh(shrunk, dir)
     assert(d3.removed == nAll - shrunk.count() && d3.added == 0, s"$d3")
-    val left = spark.read.parquet(s"$dir/members")
+    val left = spark.read.parquet(IvfIndex.memberPaths(spark, dir): _*)
     assert(left.count() == shrunk.count())
     assert(left.filter($"vec_id" % 7 === 0).count() == 0)
     // recall-floor re-check after refresh — the acceptance gate a
@@ -97,44 +97,20 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("every compaction crash window reads exactly one copy of every member") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_crash").toString
+    val template = java.nio.file.Files.createTempDirectory("graft_ivf_crash").toString
     val emb = graft.core.Tables.embeddings(spark, sf)
-    IvfIndex.write(emb.filter($"vec_id" < 400), dir, k = 4, iters = 1)
-    // streaming generation — the kind compact folds in and stages away
+    IvfIndex.write(emb.filter($"vec_id" < 400), template, k = 4, iters = 1)
+    // streaming batch — the kind compact folds in
     IvfIndex.applyAppendBatch(
-      emb.filter($"vec_id" >= 400 && $"vec_id" < 450), dir, batchId = 0L)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s"$dir/$s")
-    def memberCount: Long = {
-      val paths = IvfIndex.memberPaths(spark, dir)
-      spark.read.parquet(paths: _*).count()
+      emb.filter($"vec_id" >= 400 && $"vec_id" < 450), template, batchId = 0L)
+    val want = (0L until 450L)
+    val crashed = everyCrash(() => faultyCopy(template))(IvfIndex.compact(spark, _)) { dir =>
+      val ids = spark.read.parquet(IvfIndex.memberPaths(spark, dir): _*)
+        .select($"vec_id").as[Long].collect().sorted.toSeq
+      assert(ids == want, s"a reader saw ${ids.size} member rows, not each of ${want.size} once")
+      ids
     }
-    val want = memberCount
-    assert(want == 450L, s"baseline index should hold 450 members, saw $want")
-
-    // W2: crashed after staging members, before staging gens
-    assert(fs.rename(p("members"), p("members_old")))
-    assert(memberCount == want, "members_old + live gens must cover the index once")
-    // W3: crashed after staging gens, before the swap-in
-    assert(fs.rename(p("gens"), p("gens_old")))
-    assert(memberCount == want, "members_old + gens_old must cover the index once")
-    // healing compact from W3 completes the fold and drops staged copies
-    IvfIndex.compact(spark, dir)
-    assert(memberCount == want, "healed compact must preserve every member exactly once")
-    assert(!fs.exists(p("members_old")) && !fs.exists(p("gens_old")) && !fs.exists(p("gens")),
-      "compact must clean up staged state")
-
-    // W4: crashed after the swap-in, before cleanup — staged copies are
-    // stale duplicates and must be IGNORED while members is live
-    IvfIndex.applyAppendBatch(
-      emb.filter($"vec_id" >= 450 && $"vec_id" < 460), dir, batchId = 1L)
-    fs.mkdirs(p("members_old"))
-    assert(fs.rename(p("gens"), p("gens_old"))) // stage a stale gens copy
-    // live members + (no gens) with stale members_old/gens_old present
-    assert(memberCount == want, "stale staged copies must not double-count")
-    IvfIndex.compact(spark, dir)
-    assert(memberCount == want)
+    info(s"$crashed commit mutations crashed")
   }
 
   test("probe pushes the cell set into the members scan and decodes only probed cells") {

@@ -35,8 +35,10 @@ class SearchIndexRefreshSpec extends SparkSpec {
     assert(got == want, s"refreshed index diverged:\n$got\nvs\n$want")
 
     // merged corpus stats are exactly the full-build stats
-    val si = spark.read.parquet(s"$d/inc/stats").collect()(0)
-    val sf2 = spark.read.parquet(s"$d/full/stats").collect()(0)
+    def stats(dir: String) =
+      spark.read.parquet(s"${graft.core.Commit.current(spark, dir)}/stats").collect()(0)
+    val si = stats(s"$d/inc")
+    val sf2 = stats(s"$d/full")
     assert(si.getDouble(si.fieldIndex("n")) == sf2.getDouble(sf2.fieldIndex("n")))
     assert(si.getDouble(si.fieldIndex("sum_dl")) == sf2.getDouble(sf2.fieldIndex("sum_dl")))
     assert(si.getDouble(si.fieldIndex("avgdl")) == sf2.getDouble(sf2.fieldIndex("avgdl")))
@@ -50,15 +52,16 @@ class SearchIndexRefreshSpec extends SparkSpec {
     val d = java.nio.file.Files.createTempDirectory("sidx_legacy").toString
     SearchIndex.build(half, s"$d/inc")
     // strip sum_dl to simulate an index built before the column existed
-    val legacy = spark.read.parquet(s"$d/inc/stats").select("n", "avgdl").collect()(0)
+    val live = graft.core.Commit.current(spark, s"$d/inc")
+    val legacy = spark.read.parquet(s"$live/stats").select("n", "avgdl").collect()(0)
     spark.range(1)
       .select(lit(legacy.getDouble(0)).as("n"), lit(legacy.getDouble(1)).as("avgdl"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$d/inc/stats2")
-    val fs = new org.apache.hadoop.fs.Path(s"$d/inc")
+      .coalesce(1).write.mode("overwrite").parquet(s"$live/stats2")
+    val fs = new org.apache.hadoop.fs.Path(live)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$d/inc/stats"), true)
-    fs.rename(new org.apache.hadoop.fs.Path(s"$d/inc/stats2"),
-      new org.apache.hadoop.fs.Path(s"$d/inc/stats"))
+    fs.delete(new org.apache.hadoop.fs.Path(s"$live/stats"), true)
+    fs.rename(new org.apache.hadoop.fs.Path(s"$live/stats2"),
+      new org.apache.hadoop.fs.Path(s"$live/stats"))
 
     SearchIndexRefresh.refresh(rest, s"$d/inc")
     SearchIndex.build(docs, s"$d/full")

@@ -33,9 +33,10 @@ class SearchIndexSpec extends SparkSpec {
     // postings join), never a crash or a null score
     assert(SearchIndex.search(spark, dir, Seq("zzzznotaword")).count() == 0)
     // df consistency: df <= n for every indexed term
-    val stats = spark.read.parquet(s"$dir/stats").collect()(0)
+    val live = graft.core.Commit.current(spark, dir)
+    val stats = spark.read.parquet(s"$live/stats").collect()(0)
     val n = stats.getDouble(0)
-    val maxDf = spark.read.parquet(s"$dir/terms").agg(max(col("df")))
+    val maxDf = spark.read.parquet(s"$live/terms").agg(max(col("df")))
       .collect()(0).getDouble(0)
     assert(maxDf <= n)
   }

@@ -64,20 +64,8 @@ class SelectionSpec extends SparkSpec {
     // pin that the whole selection runs in < 8 Spark jobs (a sort-based
     // spelling would be fine too, but this guards accidental O(n) loops)
     val df = spark.range(100000).select((pmod(col("id") * 2654435761L, lit(1000003L))).cast("double").as("v"))
-    val sc = spark.sparkContext
-    val jobCount = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobCount.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    val got =
-      try Selection.kthSmallest(df, "v", 50000, collectThreshold = 1000)
-      finally {
-        org.apache.spark.graft.ListenerBridge.waitUntilEmpty(sc)
-        sc.removeSparkListener(listener)
-      }
-    assert(jobCount.get() <= 8, s"selection used ${jobCount.get()} jobs")
+    val (got, jobs) = jobsOf(Selection.kthSmallest(df, "v", 50000, collectThreshold = 1000))
+    assert(jobs.size <= 8, s"selection used ${jobs.size} jobs")
     // cross-check against a direct sort of the same frame
     val want = df.orderBy(col("v")).limit(50000).orderBy(col("v").desc).limit(1)
       .collect()(0).getDouble(0)

@@ -142,9 +142,10 @@ class VolumeSpec extends SparkSpec {
       }
       // metadata-only counts (no data pages decoded)
       def indexRows: Long = Seq("fps", "bands", "grams")
-        .map(t => spark.read.parquet(s"$dir/$t").count()).sum
+        .map(t => spark.read.parquet(s"${graft.core.Commit.current(spark, dir)}/$t").count()).sum
       def dataFiles(t: String): Long = {
-        val ls = java.nio.file.Files.list(java.nio.file.Paths.get(s"$dir/$t"))
+        val ls = java.nio.file.Files.list(
+          java.nio.file.Paths.get(s"${graft.core.Commit.current(spark, dir)}/$t"))
         try ls.filter(_.toString.endsWith(".parquet")).count()
         finally ls.close()
       }

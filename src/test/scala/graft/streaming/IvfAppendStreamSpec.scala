@@ -51,19 +51,19 @@ class IvfAppendStreamSpec extends SparkSpec {
       "streamed index diverged from batch append")
 
     // crash replay: re-applying a generation rewrites its own directory
-    val before = spark.read.parquet(s"$streamed/gens/0").count()
+    def gen0 = spark.read.parquet(s"${graft.core.Commit.current(spark, streamed)}/gens/0")
+    val before = gen0.count()
     IvfIndex.applyAppendBatch(
       spark.createDataFrame(lateA.toIndexedSeq).toDF("vec_id", "embedding"),
       streamed, 0L)
-    assert(spark.read.parquet(s"$streamed/gens/0").count() == before,
+    assert(gen0.count() == before,
       "replayed generation must not grow the index")
     assert(rows(streamed) == streamedRows, "replay changed probe results")
 
     // compaction folds generations into the base members table
     IvfIndex.compact(spark, streamed)
-    val fs = new org.apache.hadoop.fs.Path(streamed)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$streamed/gens")),
+    assert(IvfIndex.memberPaths(spark, streamed).size == 1 &&
+      graft.core.Commit.generations(spark, streamed).size == 1,
       "compaction must remove the generation directories")
     assert(rows(streamed) == streamedRows, "compaction changed probe results")
     emb.unpersist()

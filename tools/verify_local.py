@@ -48,9 +48,16 @@ def main():
             print(r.stdout[-4000:])
             print(r.stderr[-4000:])
             sys.exit(1)
-        tail = [l for l in r.stdout.splitlines() if "[verify]" in l or "error" in l.lower()]
-        for l in tail[:30]:
+        # Verify reports on stderr, which sbt tags [error] line by line:
+        # keep its own [verify] lines only — every failure, then the
+        # last progress line
+        verify = [l for l in r.stdout.splitlines() if "[verify]" in l]
+        failed = [l for l in verify if " failed: " in l]
+        for l in failed:
             print(l)
+        progress = [l for l in verify if l not in failed]
+        if progress:
+            print(progress[-1])
 
     con = duckdb.connect()
     for t in TABLES:
