@@ -17,6 +17,9 @@ import org.apache.spark.sql.SparkSession
   *    directory moves the source INTO it and reports success);
   *  - [[swap]]: one file replaced with `Rename.OVERWRITE`.
   *
+  * A plain table directory that a sink rewrites whole is [[replace]]d:
+  * staged beside it, then published in its place.
+  *
   * Tables that change together form a GENERATION `dir/v<N>/`, named by
   * `dir/_CURRENT`: [[newGeneration]] stages, publishes, points and
   * vacuums, and readers resolve [[current]], so they see the previous
@@ -92,9 +95,15 @@ object Commit {
   }
 
   /** Where the live tables of `dir` are: its current generation, or
-    * `dir` itself when it has none. */
+    * `dir` itself when it has none, or, when a crashed [[replace]] left
+    * `dir` absent, its previous contents set aside. */
   def current(spark: SparkSession, dir: String): String =
-    currentGeneration(spark, dir).fold(dir)(g => s"$dir/v$g")
+    currentGeneration(spark, dir).fold {
+      val d = new Path(dir)
+      val fs = fsOf(spark, d)
+      val aside = asideOf(d)
+      if (!fs.exists(d) && fs.exists(aside)) aside.toString else dir
+    }(g => s"$dir/v$g")
 
   /** Point `dir`'s `_CURRENT` at generation `gen`. */
   def pointTo(spark: SparkSession, dir: String, gen: Long): Unit = {
@@ -125,6 +134,37 @@ object Commit {
     pointTo(spark, dir, gen)
     vacuum(spark, dir, keep = 1)
     gen
+  }
+
+  private def asideOf(dir: Path): Path = new Path(dir.getParent, s"_aside-${dir.getName}")
+
+  /** Replace the directory `dir`, present or not, with what `write`
+    * puts in a stage path beside it: an existing `dir` is renamed aside
+    * to `_aside-<name>`, the stage is published as `dir`, and the aside
+    * is deleted. A failed write removes its stage and leaves `dir`
+    * untouched. A crash between the two renames leaves `dir` absent,
+    * which [[current]] resolves to the aside; one after the publish
+    * leaves a stale aside. The next replace of `dir` first restores the
+    * one and deletes the other. One writer per directory. */
+  def replace(spark: SparkSession, dir: String)(write: String => Unit): Unit = {
+    val fs = fsOf(spark, new Path(dir))
+    val dst = fs.makeQualified(new Path(dir))
+    val aside = asideOf(dst)
+    if (fs.exists(aside)) {
+      if (fs.exists(dst)) fs.delete(aside, true)
+      else rename(spark, aside, dst, Options.Rename.NONE)
+    }
+    val st = stage(dst.getParent.toString)
+    try {
+      write(st.toString)
+      if (fs.exists(dst)) rename(spark, dst, aside, Options.Rename.NONE)
+      publish(spark, st, dst)
+    } catch {
+      case NonFatal(e) =>
+        try fs.delete(st, true) catch { case NonFatal(s) => e.addSuppressed(s) }
+        throw e
+    }
+    if (fs.exists(aside)) fs.delete(aside, true)
   }
 
   /** Retention: delete all but the `keep` highest generations (never

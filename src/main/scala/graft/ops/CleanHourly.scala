@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.schemas.QcFlags
+import graft.schemas.{Checks, QcFlags}
 
 /** The QC-clean stage: validate-in → dedup → flag-missing →
   * flag+nullify out-of-range → flag spikes → validate-out.
@@ -64,11 +64,20 @@ object CleanHourly {
     * full contract except key uniqueness, which [[dedup]] guarantees by
     * construction (row_number() == 1 per (station_id, ts_utc), and the
     * flag steps only add columns) — checking it again would cost a
-    * groupBy job over the whole lineage. */
+    * groupBy job over the whole lineage.
+    *
+    * Both validations are deferred ([[graft.schemas.Checks.deferred]]):
+    * a missing column or a wrong type throws here, and this call starts
+    * no Spark job. The data rules are computed by the job that consumes
+    * the returned frame and enforced where an engine sink writes it
+    * (`Sinks.writeHourlyObs`), which throws the input rules' message
+    * before the output rules', as the eager stage did, and leaves its
+    * target untouched. A caller that consumes the frame any other way
+    * wraps that in [[graft.schemas.Checks.enforce]]. */
   def apply(df: DataFrame, spikeThreshold: Double = 15.0): DataFrame = {
-    val validated = graft.schemas.Checks.validateHourlyObsStructure(df)
+    val validated = Checks.hourlyObsStructure(df).deferred()
     val cleaned = flagSpikes(
       flagOutOfRange(flagMissing(dedup(validated))), spikeThreshold)
-    graft.schemas.Checks.validateHourlyObs(cleaned, requireUniqueKeys = false)
+    Checks.hourlyObs(cleaned).deferred()
   }
 }

@@ -264,7 +264,12 @@ object Snapshots {
     * append never conflicts semantically (the Iceberg fast-append
     * retry). [[commitRewrite]] deliberately does NOT retry: a rewrite
     * losing to another commit may be removing files the winner also
-    * touched, and that conflict needs the caller's judgement. */
+    * touched, and that conflict needs the caller's judgement.
+    *
+    * IDEMPOTENT: when the listing, the tombstones and the delete
+    * watermark all equal the latest snapshot's, that snapshot is
+    * returned and nothing is committed, so a retry after a landed
+    * commit adds no snapshot. */
   def commitFromFs(spark: SparkSession, dataDir: String, root: String,
       cols: Seq[String], posDeleteDir: Option[String] = None,
       eqDeleteDir: Option[String] = None): Commit = {
@@ -341,6 +346,14 @@ object Snapshots {
           val p = norm(r.getString(fi))
           !p.startsWith(dataPrefix) || curPaths(p)
         }
+        val wm = watermarkRows(spark, old.schema, prevSeqOf,
+          posDeleteDir, eqDeleteDir, next)
+        // nothing changed since `prev` (a retry after a landed commit):
+        // `prev` is this commit
+        if (newFiles.isEmpty && kept.length == oldData.length &&
+            keptRemoved.length == oldRemoved.length &&
+            wm.map(r => (r.getString(ki), norm(r.getString(fi)))).toSet == prevSeqOf.keySet)
+          return Commit(prev, 0, 0, kept.length)
         val keptDf = spark.createDataFrame(
           new java.util.ArrayList(java.util.Arrays.asList(
             kept ++ keptRemoved: _*)), old.schema)
@@ -349,8 +362,6 @@ object Snapshots {
           else keptDf.unionByName(
             withMeta(Manifest.statsFor(spark, dataDir, cols, newFiles), next)
               .select(old.schema.fieldNames.map(col): _*))
-        val wm = watermarkRows(spark, old.schema, prevSeqOf,
-          posDeleteDir, eqDeleteDir, next)
         val full =
           if (wm.isEmpty) combined
           else combined.unionByName(spark.createDataFrame(

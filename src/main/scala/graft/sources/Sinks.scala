@@ -3,23 +3,42 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
+import graft.core.Commit
+import graft.schemas.Checks
+
 /** Sinks — SURVEY §2.1 S8/S9.
   *
   * The reference writes `.parquet.tmp` then renames for atomicity
-  * (build_daily_tmax.py:146-151); Spark's commit protocol (staging dir +
-  * job commit) replaces that. Partition layout follows §4: Hive-style
-  * station_id/year directories so station- and time-sliced reads prune
-  * partitions at planning time — the manual per-year file naming of the
-  * reference (isd_<year>.parquet) done by the engine instead.
+  * (build_daily_tmax.py:146-151). The hourly and daily sinks do the
+  * same through `graft.core.Commit.replace`: Spark writes a stage
+  * directory beside the target, and the stage replaces the target only
+  * after the write succeeded and every pending check on the frame
+  * passed, so a failed or rejected write leaves the previous table in
+  * place. Partition layout follows §4: Hive-style station_id/year
+  * directories so station- and time-sliced reads prune partitions at
+  * planning time — the manual per-year file naming of the reference
+  * (isd_<year>.parquet) done by the engine instead.
+  *
+  * Checks contract: a frame carrying deferred checks
+  * ([[graft.schemas.Checks.deferred]], e.g. `CleanHourly`'s output) is
+  * enforced here, by the write's own job. The other sinks do not
+  * enforce; consuming a checked frame there (or through a raw
+  * `DataFrameWriter`) needs [[graft.schemas.Checks.enforce]] around it.
   */
 object Sinks {
 
+  /** Write `df` as the whole of `dir` with `write`, staged, enforcing
+    * the frame's pending checks before it is published. */
+  private def replaceChecked(df: DataFrame, dir: String)(write: String => Unit): Unit =
+    Commit.replace(df.sparkSession, dir)(stage => Checks.enforce(df)(write(stage)))
+
   /** Canonical hourly_obs layout: partitioned by (station_id, year). */
-  def writeHourlyObs(df: DataFrame, dir: String, mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.withColumn("year", year(col("ts_utc")))
-      .write.mode(mode)
-      .partitionBy("station_id", "year")
-      .parquet(dir)
+  def writeHourlyObs(df: DataFrame, dir: String): Unit =
+    replaceChecked(df, dir) { stage =>
+      df.withColumn("year", year(col("ts_utc")))
+        .write.partitionBy("station_id", "year")
+        .parquet(stage)
+    }
 
   /** Daily tables: partitioned by station only (small per-station files;
     * a year split would fragment 365-row partitions). Rows are sorted by
@@ -27,10 +46,12 @@ object Sinks {
     * groups from footer min/max stats — the [[writeSortedBy]] property
     * applied to the production daily layout (this is the CLI's default
     * build-daily sink). */
-  def writeDaily(df: DataFrame, dir: String, mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.repartition(col("station_id"))
-      .sortWithinPartitions(col("station_id"), col("date_local"))
-      .write.mode(mode).partitionBy("station_id").parquet(dir)
+  def writeDaily(df: DataFrame, dir: String): Unit =
+    replaceChecked(df, dir) { stage =>
+      df.repartition(col("station_id"))
+        .sortWithinPartitions(col("station_id"), col("date_local"))
+        .write.partitionBy("station_id").parquet(stage)
+    }
 
   /** Bucketed layout for co-located joins: both sides of a recurring
     * fact⋈fact join written with the SAME bucket count on the SAME key

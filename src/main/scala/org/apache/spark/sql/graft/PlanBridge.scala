@@ -43,6 +43,13 @@ object PlanBridge {
   def expression(c: org.apache.spark.sql.Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
 
+  /** The observation Spark fills for the `CollectMetrics` node `name`
+    * of the frame `dataframeId` when the next query that runs it ends:
+    * the one registered by `Dataset.observe`, or a fresh one once an
+    * earlier query has filled and released that. */
+  def observation(spark: SparkSession, name: String, dataframeId: Long): org.apache.spark.sql.Observation =
+    spark.asInstanceOf[classic.SparkSession].observationManager.getOrNewObservation(name, dataframeId)
+
   /** The optimizer rules an extensions entry point injects. */
   def injectedOptimizerRules(
       ext: org.apache.spark.sql.SparkSessionExtensions,

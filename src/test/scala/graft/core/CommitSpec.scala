@@ -176,12 +176,13 @@ class CommitSpec extends CrashChecks {
       Seq(3L).toDF("k").coalesce(1).write.mode("append").parquet(s"$dir/data")
       dir
     }
-    // the listing is the truth for this commit: a retry after a landed
-    // commit numbers one more snapshot of the same files
+    // the snapshot id is observed too: a retry after a landed commit
+    // finds nothing changed and returns that snapshot, so the history
+    // holds exactly one landing
     everyCrash(() => fresh())(dir =>
       Snapshots.commitFromFs(spark, s"$dir/data", s"$dir/snaps", Seq("k"))) { dir =>
       val snap = Snapshots.latest(spark, s"$dir/snaps").get
-      Snapshots.readAt(spark, s"$dir/snaps", snap).select("k").as[Long].collect().sorted.toSeq
+      (snap, Snapshots.readAt(spark, s"$dir/snaps", snap).select("k").as[Long].collect().sorted.toSeq)
     }
   }
 

@@ -535,12 +535,14 @@ class SnapshotsSpec extends SparkSpec {
     val c2 = Snapshots.commitFromFs(spark, data, root, Seq("k"))
     assert(c2.added == 1, s"only the new file is new, got ${c2.added}")
     assert(sumK(Snapshots.readAt(spark, root, 2L)) == ((120L, 120L * 121 / 2)))
-    // redundant append commit stays a no-op in content
+    // a redundant append commit is a no-op: it returns the latest
+    // snapshot instead of committing another
     val c3 = Snapshots.commitFromFs(spark, data, root, Seq("k"))
-    assert(c3.added == 0 && sumK(Snapshots.readAt(spark, root, 3L)) ==
+    assert(c3.snapshot == c2.snapshot && Snapshots.latest(spark, root) == Some(c2.snapshot))
+    assert(c3.added == 0 && sumK(Snapshots.readAt(spark, root, c3.snapshot)) ==
       ((120L, 120L * 121 / 2)))
     // the tombstones ride every manifest while the dead files exist…
-    val m3 = Snapshots.manifestAt(spark, root, 3L)
+    val m3 = Snapshots.manifestAt(spark, root, c3.snapshot)
     assert(m3.filter(col("kind") === "removed").count() == 2)
     // …and prune once expire physically deletes them
     Snapshots.expire(spark, root, keepFrom = 2L)
