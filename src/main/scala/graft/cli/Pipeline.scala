@@ -168,7 +168,7 @@ object Pipeline {
       println(s"[graft] dedup-admit: $byStatus → $outDir (index updated)")
 
     case "dedup-compact" :: indexDir :: Nil =>
-      // offline maintenance: merge appended files back into
+      // offline maintenance: fold every append's delta back into
       // fully-sorted tables so footer pruning holds index-wide again
       graft.ops.DedupIndex.compact(spark, indexDir)
       println(s"[graft] dedup-compact: re-sorted index tables at $indexDir")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.Commit
+import graft.core.{Commit, IndexMeta}
 
 /** Persisted IVF (inverted-file) ANN index — the similarity-search
   * sibling of [[DedupIndex]]: the write-once derivable columns of an
@@ -15,7 +15,7 @@ import graft.core.Commit
   *
   *   centroids  (cell, emb)                      the learned coarse quantizer
   *   members    (vec_id, cell, embedding, norm)  one row per vector
-  *   meta       (k)                              quantizer arity
+  *   meta       JSON file                        quantizer arity, table schemas
   *   gens/<b>   members of streaming batch b     ([[applyAppendBatch]])
   *
   * The four are one generation of `dir` ([[graft.core.Commit]]).
@@ -59,16 +59,22 @@ object IvfIndex {
     val centSchema = StructType(Seq(
       StructField("cell", IntegerType, nullable = false),
       StructField("emb", ArrayType(DoubleType, containsNull = false), nullable = false)))
+    val centroids = spark.createDataFrame(
+      spark.sparkContext.parallelize(centRows.toIndexedSeq, 1), centSchema)
+    val members = membersOf(emb, cents)
     Commit.newGeneration(spark, dir) { gen =>
-      spark.createDataFrame(
-          spark.sparkContext.parallelize(centRows.toIndexedSeq, 1), centSchema)
-        .repartition(1).write.mode(SaveMode.Overwrite).parquet(s"$gen/centroids")
-      writeMembersInto(emb, cents, s"$gen/members", SaveMode.Overwrite)
-      import spark.implicits._
-      Seq(k).toDF("k")
-        .repartition(1).write.mode(SaveMode.Overwrite).parquet(s"$gen/meta")
-      fsOf(spark, gen).mkdirs(new Path(gen, "gens"))
+      centroids.repartition(1).write.mode(SaveMode.Overwrite).parquet(s"$gen/centroids")
+      writeMembersInto(members, s"$gen/members", SaveMode.Overwrite)
+      describe(spark, gen, k, centroids, members)
     }
+  }
+
+  /** The generation's `meta` and its empty `gens/`. */
+  private def describe(spark: SparkSession, gen: String, k: Int,
+      centroids: DataFrame, members: DataFrame): Unit = {
+    IndexMeta.write(spark, gen,
+      IndexMeta.of(Map("k" -> k), "centroids" -> centroids, "members" -> members))
+    fsOf(spark, gen).mkdirs(new Path(gen, "gens"))
   }
 
   /** Append new vectors, assigned with the STORED centroids. Existing
@@ -76,8 +82,17 @@ object IvfIndex {
     * per-file cell sort, so cell pruning holds within every
     * generation. */
   def append(emb: DataFrame, dir: String): Unit =
-    writeMembersInto(emb, readCentroids(emb.sparkSession, dir),
-      s"${Commit.current(emb.sparkSession, dir)}/members", SaveMode.Append)
+    appendInto(emb, dir, "members", SaveMode.Append)
+
+  /** Assign `emb` with the stored centroids and write it to `sub` of
+    * the live generation, after checking it has the members schema. */
+  private def appendInto(emb: DataFrame, dir: String, sub: String, mode: SaveMode): Unit = {
+    val spark = emb.sparkSession
+    val live = Commit.current(spark, dir)
+    val members = membersOf(emb, readCentroids(spark, dir))
+    IndexMeta.read(spark, live).requireSchema("members", members)
+    writeMembersInto(members, s"$live/$sub", mode)
+  }
 
   /** What [[refresh]] found and did: vectors indexed for the first
     * time, members untouched, members dropped (vanished from the
@@ -154,18 +169,19 @@ object IvfIndex {
     * idempotent per batch id (batch directories are disjoint by
     * construction, so none needs a pointer). */
   def applyAppendBatch(batch: DataFrame, dir: String, batchId: Long): Unit =
-    writeMembersInto(batch, readCentroids(batch.sparkSession, dir),
-      s"${Commit.current(batch.sparkSession, dir)}/gens/$batchId", SaveMode.Overwrite)
+    appendInto(batch, dir, s"gens/$batchId", SaveMode.Overwrite)
 
-  private def writeMembersInto(emb: DataFrame, cents: Array[Array[Double]],
-      path: String, mode: SaveMode): Unit = {
-    val rows = emb.select(
+  /** The member rows of `emb` under the centroids `cents`. */
+  private def membersOf(emb: DataFrame, cents: Array[Array[Double]]): DataFrame =
+    emb.select(
       col("vec_id"),
       KMeansVec.cellExpr("embedding", cents).as("cell"),
       col("embedding"),
       sqrt(vecDot(col("embedding"), col("embedding"))).as("norm"))
+
+  private def writeMembersInto(rows: DataFrame, path: String, mode: SaveMode): Unit = {
     // cache across writeSortedBy's range-sample + write pair (same
-    // lifecycle containment as DedupIndex.writeFrames)
+    // lifecycle containment as DedupIndex.write)
     val cached = rows.persist()
     try graft.sources.Sinks.writeSortedBy(cached, path, Seq("cell"), mode = mode)
     finally cached.unpersist(false)
@@ -187,14 +203,15 @@ object IvfIndex {
   }
 
   private def readMembers(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(memberPaths(spark, dir): _*)
+    IndexMeta.read(spark, Commit.current(spark, dir))
+      .open(spark, "members", memberPaths(spark, dir))
 
   /** Compact streaming batches and appended files: rewrite `members`
     * fully cell-sorted, with every batch under `gens/` folded in, so
     * footer pruning holds across the WHOLE index again (same offline
     * maintenance contract as [[DedupIndex.compact]]), as a new
-    * generation beside copies of the centroids and meta: every crash
-    * window reads each member exactly once.
+    * generation beside a copy of the centroids and a fresh meta: every
+    * crash window reads each member exactly once.
     *
     * Single-writer contract: compaction must not run concurrently with
     * [[applyAppendBatch]] or [[append]] — a batch landing in the
@@ -209,15 +226,15 @@ object IvfIndex {
   private def compactWith(spark: SparkSession, dir: String,
       keep: DataFrame => DataFrame): Unit = {
     val live = Commit.current(spark, dir)
+    val meta = IndexMeta.read(spark, live)
     val members = keep(readMembers(spark, dir))
     Commit.newGeneration(spark, dir) { gen =>
       graft.sources.Sinks.writeSortedBy(members, s"$gen/members", Seq("cell"))
       val fs = fsOf(spark, gen)
-      Seq("centroids", "meta").foreach { t =>
-        org.apache.hadoop.fs.FileUtil.copy(fs, new Path(s"$live/$t"),
-          fs, new Path(s"$gen/$t"), false, spark.sparkContext.hadoopConfiguration)
-      }
-      fs.mkdirs(new Path(gen, "gens"))
+      org.apache.hadoop.fs.FileUtil.copy(fs, new Path(s"$live/centroids"),
+        fs, new Path(s"$gen/centroids"), false, spark.sparkContext.hadoopConfiguration)
+      describe(spark, gen, meta.param("k"),
+        meta.open(spark, "centroids", Seq(s"$live/centroids")), members)
     }
   }
 
@@ -225,12 +242,14 @@ object IvfIndex {
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** The stored coarse quantizer, ordered by cell id. */
-  def readCentroids(spark: SparkSession, dir: String): Array[Array[Double]] =
-    spark.read.parquet(s"${Commit.current(spark, dir)}/centroids").orderBy(col("cell")).collect()
-      .map(_.getSeq[Double](1).toArray)
+  def readCentroids(spark: SparkSession, dir: String): Array[Array[Double]] = {
+    val live = Commit.current(spark, dir)
+    IndexMeta.read(spark, live).open(spark, "centroids", Seq(s"$live/centroids"))
+      .orderBy(col("cell")).collect().map(_.getSeq[Double](1).toArray)
+  }
 
   def storedK(spark: SparkSession, dir: String): Int =
-    spark.read.parquet(s"${Commit.current(spark, dir)}/meta").head.getInt(0)
+    IndexMeta.read(spark, Commit.current(spark, dir)).param("k")
 
   /** Exact-cosine top-k over the index for a (query_id, embedding)
     * frame: map-side probe-cell assignment against the stored centroid

@@ -138,21 +138,12 @@ object Sinks {
   /** Forecast parts keyed by issue time (the reference's
     * part-YYYY-MM-DDTHH.parquet, openmeteo_daily_forecast.py:270-274):
     * dynamic-partition append — re-ingesting one issue hour overwrites
-    * only that partition. */
-  def appendForecastPartition(df: DataFrame, dir: String): Unit = {
-    val spark = df.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      df.withColumn("issue_hour", date_format(col("issue_time_utc"), "yyyy-MM-dd'T'HH"))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("station_id", "issue_hour")
-        .parquet(dir)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None    => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
-  }
+    * only that partition. The mode is this write's option, so a query
+    * running beside it on the session keeps its own setting. */
+  def appendForecastPartition(df: DataFrame, dir: String): Unit =
+    df.withColumn("issue_hour", date_format(col("issue_time_utc"), "yyyy-MM-dd'T'HH"))
+      .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("station_id", "issue_hour")
+      .parquet(dir)
 }

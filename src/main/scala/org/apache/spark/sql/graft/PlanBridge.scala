@@ -43,6 +43,11 @@ object PlanBridge {
   def expression(c: org.apache.spark.sql.Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
 
+  /** `schema` with every field, array element and map value nullable:
+    * the schema a reader of parquet files written from it sees. */
+  def asNullable(schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    schema.asNullable
+
   /** The observation Spark fills for the `CollectMetrics` node `name`
     * of the frame `dataframeId` when the next query that runs it ends:
     * the one registered by `Dataset.observe`, or a fresh one once an

@@ -36,6 +36,16 @@ class CommitSpec extends CrashChecks {
     assert(Commit.currentGeneration(spark, dir).isEmpty)
   }
 
+  /** Replace the meta file of the pointer-less layout `dir` with the
+    * one-row parquet table the index writers produced before it, and
+    * drop what they did not make: the layout of an index written then. */
+  private def parquetMeta(dir: String, param: String, value: Int, drop: String*): Unit = {
+    assert(local.getFileStatus(new Path(dir, IndexMeta.Name)).isFile)
+    local.delete(new Path(dir, IndexMeta.Name), false)
+    drop.foreach(n => local.delete(new Path(dir, n), true))
+    Seq(value).toDF(param).repartition(1).write.parquet(s"$dir/${IndexMeta.Name}")
+  }
+
   private val docsA = Seq(
     (1L, "the quick brown fox jumps over the lazy dog again and again today"),
     (2L, "completely different words about spark engines and parquet files here"))
@@ -111,6 +121,14 @@ class CommitSpec extends CrashChecks {
     DedupIndex.write(docsA, template)
     DedupIndex.append(docsB, template)
     everyCrash(() => faultyCopy(template))(DedupIndex.compact(spark, _))(dedupView)
+  }
+
+  test("DedupIndex.append: every crash reads the previous index or the next; a retry adds no rows") {
+    val template = tmp("graft_crash_dappend")
+    DedupIndex.write(docsA, template)
+    // the retry after a landed append meets its own delta and adds nothing
+    val n = everyCrash(() => faultyCopy(template))(DedupIndex.append(docsB, _))(dedupView)
+    info(s"$n commit mutations crashed")
   }
 
   test("SearchIndexRefresh: every crash reads df and n from the same refresh") {
@@ -211,7 +229,9 @@ class CommitSpec extends CrashChecks {
     val d = tmp("graft_legacy_didx")
     DedupIndex.write(docsA, d)
     flatten(d)
+    parquetMeta(d, "rows_per_band", 4, "deltas")
     assert(names(d) == Set("fps", "bands", "grams", "meta"))
+    assert(jobsOf(DedupIndex.read(spark, d))._2.nonEmpty, "a parquet meta opens by inference")
     assert(dedupView(d)._1 == Seq(1L, 2L))
     DedupIndex.append(docsB, d)
     val appended = dedupView(d)
@@ -219,6 +239,7 @@ class CommitSpec extends CrashChecks {
     DedupIndex.compact(spark, d)
     assert(dedupView(d) == appended)
     assert(names(d) == Set("v0", "_CURRENT"), s"legacy tables left behind: ${names(d)}")
+    assert(jobsOf(DedupIndex.read(spark, d))._2.isEmpty, "compaction writes the meta file")
   }
 
   test("a SearchIndex written without a pointer searches and refreshes") {
@@ -240,7 +261,9 @@ class CommitSpec extends CrashChecks {
     IvfIndex.write(emb.filter($"vec_id" < 40), d, k = 2, iters = 1)
     IvfIndex.applyAppendBatch(emb.filter($"vec_id" >= 40 && $"vec_id" < 50), d, 0L)
     flatten(d)
+    parquetMeta(d, "k", 2)
     assert(names(d) == Set("centroids", "members", "meta", "gens"))
+    assert(IvfIndex.storedK(spark, d) == 2)
     def ids = spark.read.parquet(IvfIndex.memberPaths(spark, d): _*)
       .select("vec_id").as[Long].collect().sorted.toSeq
     assert(ids == (0L until 50L))

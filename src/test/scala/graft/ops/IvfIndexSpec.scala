@@ -58,6 +58,21 @@ class IvfIndexSpec extends graft.core.CrashChecks {
       "compaction must not change probe results")
   }
 
+  test("an ivf-topk probe opens the index with its stored schemas") {
+    // the CLI's ivf-topk: probe from disk and write the neighbors. The
+    // meta file carries the table schemas, so opening the centroids and
+    // the members runs no inference job (10 jobs with inference)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_jobs").toString
+    val out = java.nio.file.Files.createTempDirectory("graft_ivf_jobs_out").toString
+    val emb = graft.core.Tables.embeddings(spark, sf).select($"vec_id", $"embedding")
+    IvfIndex.write(emb, dir, k = 4, iters = 1)
+    val queries = emb.filter($"vec_id" < 5).select($"vec_id".as("query_id"), $"embedding")
+    val (_, jobs) = jobsOf(IvfIndex.topk(spark, dir, queries, topK = 3)
+      .write.mode("overwrite").parquet(out))
+    info(s"jobs: ${jobs.size}")
+    assert(jobs.size <= 8, s"ivf-topk ran ${jobs.size} Spark jobs")
+  }
+
   test("refresh: delta-only indexing equals the stored-centroid assignment, drops vanished, holds recall") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_refresh").toString
     val emb = graft.core.Tables.embeddings(spark, sf)

@@ -284,38 +284,48 @@ class SnapshotsSpec extends SparkSpec {
     // truth — the rename loser must RETRY against the winner's snapshot
     // (re-list, re-derive) instead of failing the append
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val landed = new java.util.concurrent.ConcurrentHashMap[String, Snapshots.Commit]()
     val threads = Seq((101L to 150L, "a"), (151L to 200L, "b")).map {
       case (ks, tag) =>
         new Thread(() =>
           try {
             ks.toDF("k").coalesce(1).write.parquet(s"$data/$tag")
-            Snapshots.commitFromFs(spark, data, root, Seq("k"))
+            landed.put(tag, Snapshots.commitFromFs(spark, data, root, Seq("k")))
             ()
           } catch { case t: Throwable => errs.add(t); () })
     }
     threads.foreach(_.start()); threads.foreach(_.join())
     assert(errs.isEmpty, s"concurrent append failed: ${errs.peek()}")
-    // exactly one snapshot per commit, strictly ordered ids
-    assert(Snapshots.snapshots(spark, root) == Seq(0L, 1L, 2L))
-    // the final snapshot carries BOTH appenders' rows (the last
-    // committer listed after the other's commit — FS truth)
-    assert(sumK(Snapshots.readAt(spark, root, 2L)) == ((200L, 200L * 201 / 2)))
+    // each appender's returned snapshot admits its own file
+    Seq("a", "b").foreach { tag =>
+      val snap = landed.get(tag).snapshot
+      assert(Snapshots.filesAt(spark, root, snap).exists(_.contains(s"/data/$tag/")),
+        s"appender $tag's snapshot $snap lacks its file")
+    }
+    // the last snapshot carries BOTH appenders' rows (the last
+    // committer listed after the other's files landed — FS truth)
+    val snaps = Snapshots.snapshots(spark, root)
+    val last = snaps.last
+    assert(sumK(Snapshots.readAt(spark, root, last)) == ((200L, 200L * 201 / 2)))
     // sequence numbers: the base file keeps seq 0; each appended file
-    // carries the sequence of the commit that FIRST LISTED it — (0,1,2)
-    // when the commits interleave with the writes, (0,1,1) when the
-    // first committer's FS listing already caught both files (both are
-    // correct: the FS is the truth for the append path, and a file's
-    // seq must never exceed the snapshot that first admitted it)
-    val seqs = Snapshots.manifestAt(spark, root, 2L)
+    // carries the sequence of the commit that FIRST LISTED it. Two
+    // outcomes, both correct (the FS is the truth for the append path,
+    // and a file's seq never exceeds the snapshot that first admitted
+    // it): the commits interleave with the writes, one snapshot per
+    // commit and seqs (0,1,2); or the first committer's listing already
+    // caught both files, so the second commit finds nothing new and
+    // lands no snapshot, and seqs are (0,1,1)
+    val seqs = Snapshots.manifestAt(spark, root, last)
       .filter($"kind" === "data").select($"seq").as[Long]
       .collect().sorted.toSeq
-    assert(seqs == Seq(0L, 1L, 2L) || seqs == Seq(0L, 1L, 1L), s"seqs: $seqs")
+    assert((snaps, seqs) == ((Seq(0L, 1L, 2L), Seq(0L, 1L, 2L))) ||
+      (snaps, seqs) == ((Seq(0L, 1L), Seq(0L, 1L, 1L))), s"snapshots $snaps with seqs $seqs")
     // rewrite-vs-rewrite conflict stays loud, no retry: once a rewrite
     // removed a file, a second rewrite derived against the stale state
     // (removing the same file) fails — remove-vs-remove needs the
     // caller's judgement, not an automatic reapply
     (201L to 210L).toDF("k").coalesce(1).write.parquet(s"$d/cout")
-    val victim = Snapshots.filesAt(spark, root, 2L).head
+    val victim = Snapshots.filesAt(spark, root, last).head
     Snapshots.commitRewrite(spark, root, removed = Seq(victim),
       addedDir = s"$d/cout", cols = Seq("k"))
     (211L to 220L).toDF("k").coalesce(1).write.parquet(s"$d/cout2")

@@ -140,24 +140,23 @@ class VolumeSpec extends SparkSpec {
           rowsRead.get()
         } finally spark.conf.set(bcKey, prevBc)
       }
-      // metadata-only counts (no data pages decoded)
-      def indexRows: Long = Seq("fps", "bands", "grams")
-        .map(t => spark.read.parquet(s"${graft.core.Commit.current(spark, dir)}/$t").count()).sum
-      def dataFiles(t: String): Long = {
-        val ls = java.nio.file.Files.list(
-          java.nio.file.Paths.get(s"${graft.core.Commit.current(spark, dir)}/$t"))
-        try ls.filter(_.toString.endsWith(".parquet")).count()
-        finally ls.close()
+      // metadata-only counts (no data pages decoded), over the base
+      // tables and every append's delta
+      def tables = {
+        val f = DedupIndex.read(spark, dir)
+        Seq(f.fps, f.bands, f.grams)
       }
+      def indexRows: Long = tables.map(_.count()).sum
+      def dataFiles: Long = tables.map(_.inputFiles.length.toLong).sum
 
       val total = indexRows
       val grown = probe(maxPushdownKeys = 1024)
       assert(grown < total / 4,
         s"probe decoded $grown of $total index rows across 9 generations — pruning is not bounding the probe")
 
-      val filesBefore = dataFiles("fps") + dataFiles("bands") + dataFiles("grams")
+      val filesBefore = dataFiles
       DedupIndex.compact(spark, dir)
-      val filesAfter = dataFiles("fps") + dataFiles("bands") + dataFiles("grams")
+      val filesAfter = dataFiles
       assert(filesAfter < filesBefore,
         s"compaction must shrink the file count ($filesBefore -> $filesAfter)")
       val compacted = probe(maxPushdownKeys = 1024)

@@ -121,6 +121,28 @@ class SinksSpec extends SparkSpec {
     assert(out.toSeq == Seq(87.0, 88.0)) // 12:00 replaced, 18:00 untouched
   }
 
+  test("a forecast append keeps the session's partitionOverwriteMode, during and after the write") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val dir = Files.createTempDirectory("graft_fc_conf").toString
+    def part(issue: String) = Seq(("KLGA", Timestamp.valueOf(issue), 86.0))
+      .toDF("station_id", "issue_time_utc", "tmax_pred_f")
+    val prev = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "STATIC")
+      // each job of a query carries the session's SQL conf as its local
+      // properties: what a query running beside the write would see
+      val (_, jobs) = jobsOf(Sinks.appendForecastPartition(part("2024-07-01 12:00:00"), dir))
+      assert(jobs.nonEmpty)
+      assert(jobs.forall(_.getProperty(key) == "STATIC"),
+        s"the write changed the session's mode: ${jobs.map(_.getProperty(key))}")
+      assert(spark.conf.get(key) == "STATIC")
+      spark.conf.unset(key)
+      Sinks.appendForecastPartition(part("2024-07-01 18:00:00"), dir)
+      assert(!spark.conf.getAll.contains(key), "an unset mode must stay unset")
+      assert(spark.read.parquet(dir).count() == 2)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("bucketed tables join co-located: no exchange on either side") {
     val left = (1 to 200).map(i => (i.toLong, s"l$i")).toDF("k", "lv")
     val right = (1 to 200).map(i => (i.toLong, i * 2.0)).toDF("k", "rv")
